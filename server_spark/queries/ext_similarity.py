@@ -2009,7 +2009,7 @@ def x108_embedding_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # values are bit-identical, pinned by tests/test_x108*).
     _scale = (
         "greatest(array_max(transform(embedding,"
-        " x -> abs(CAST(x AS DOUBLE)))) / 127, 1E-12)"
+        " e -> abs(CAST(e AS DOUBLE)))) / 127, 1E-12)"
     )
     pairs = emb.select(
         "vec_id",

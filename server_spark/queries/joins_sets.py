@@ -1770,17 +1770,16 @@ def coreness(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
         if new_sum == cur_sum:
             break
         cur_sum = new_sum
+    else:
+        # Σc still falling after max_rounds: the values are upper bounds
+        # on coreness, not coreness, so returning them would be wrong.
+        raise RuntimeError(
+            f"coreness did not converge in {max_rounds} rounds "
+            f"(Σc still falling, now {cur_sum}); raise max_rounds"
+        )
     return cur.select(F.col("u").alias("item"), F.col("c").alias("coreness"))
 
 
-# Promoted from rows-only (r12): k-core PEELING is a deletion
-# fixpoint (not monotone-append), but the h-index PROPAGATION this
-# query actually runs is a pure iterate-to-fixpoint map — and DuckDB
-# accepts GROUP BY/windows in the recursive member (probed), so the
-# oracle replays the identical integer lattice descent for a fixed 50
-# rounds (monotone nonincreasing: extra rounds past convergence are
-# no-ops, so fixed-count == Spark's early-exit loop). Integer-only —
-# bit-exact, no rounding needed.
 # Promoted from rows-only (r12): k-core PEELING is a deletion
 # fixpoint (not monotone-append), but the h-index PROPAGATION this
 # query actually runs is a pure iterate-to-fixpoint map — and DuckDB

@@ -4379,10 +4379,16 @@ def t44_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow. Row/column semantics are the join form's: an entry
     # exists there iff its dense cell > 0 (all p are strictly
     # positive), so the pi > 0 filter reproduces vfinal's key set,
-    # and ns stays COUNT(DISTINCT s) of P¹ (= size(ss)) exactly as
-    # the oracle computes it. Interleaved A/B: 2.16 -> 0.97 s median
-    # with bit-identical output (scripts/exp_r15b.py t44A/t44B);
-    # oracle hash-green at every sf.
+    # and ns is COUNT(DISTINCT s) of P¹ (= size(ss)) exactly as the
+    # oracle computes it. The join form divided by the distinct
+    # sources of P^64 instead, so the two agree bit for bit only when
+    # no state's walks all die out in a terminal sink within 64 steps
+    # (a dangling-sink chain); with one, this form matches the oracle
+    # and the join form did not (pinned by
+    # tests/test_analytics.py::test_t44_terminal_sink_matches_oracle).
+    # Interleaved A/B on the harness data, which has no such chain:
+    # 2.16 -> 0.97 s median with bit-identical output
+    # (scripts/exp_r15b.py t44A/t44B); oracle hash-green at every sf.
     one = (
         p.agg(
             F.sort_array(F.collect_set("s")).alias("ss"),

@@ -1090,6 +1090,52 @@ def test_t44_stationary_matches_numpy(spark):
     )
 
 
+def test_t44_terminal_sink_matches_oracle(spark, tmp_path):
+    """A dangling-sink chain: 'login' is always followed by 'logout',
+    which always ends a user's sequence, so every walk from 'login'
+    dies after two steps while 'view' <-> 'click' keeps its mass. t44
+    divides by the three sources of P^1 (not the two of P^64), so the
+    stationary mass is 2/3, and it must match its DuckDB twin."""
+    import os
+    from datetime import datetime, timedelta
+
+    from server_spark.parity_check import TABLES, run_parity
+
+    seqs = [
+        ["view", "click", "view", "click", "view"],
+        ["click", "view", "view", "click", "click"],
+        ["login", "logout"],
+        ["login", "logout"],
+    ]
+    rows = [
+        (user, event, i)
+        for user, seq in enumerate(seqs) for i, event in enumerate(seq)
+    ]
+    t0 = datetime(2024, 1, 1)
+    pd.DataFrame({
+        "event_id": range(len(rows)),
+        "ts": [t0 + timedelta(hours=user, minutes=i) for user, _, i in rows],
+        "user_id": [user for user, _, _ in rows],
+        "event_type": [event for _, event, _ in rows],
+        "value": [1.0] * len(rows),
+        "props": ['{"k": 0}'] * len(rows),
+    }).astype({"ts": "datetime64[us]"}).to_parquet(
+        tmp_path / "events.parquet", index=False
+    )
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    passed, _, failed = run_parity(
+        spark, str(tmp_path), only={"t44_markov_stationary"}, verbose=False
+    )
+    assert passed == ["t44_markov_stationary"] and not failed, failed
+    from server_spark.registry import queries
+
+    got = queries()["t44_markov_stationary"](spark, str(tmp_path)).collect()
+    assert {r["state"] for r in got} == {"view", "click"}
+    assert sum(r["stationary_prob"] for r in got) == pytest.approx(2 / 3, abs=2e-4)
+
+
 # ---------------------------------------------------------------------------
 # x108 / procrustes operator — numpy reference + planted-rotation recovery
 # ---------------------------------------------------------------------------

@@ -212,7 +212,7 @@ def test_keyset_pagination_matches_window_slices(spark, sf_dir):
 # Property tests: arbitrary request-parameter combinations (r6 verdict 6)
 # ---------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _REQS = st.fixed_dictionaries(
@@ -311,3 +311,198 @@ def test_query_auctions_cursor_mode_matches_offset_pages(spark, sf_dir):
         if not got:
             break
         after = api.cursor_of(req, got[-1])
+
+
+# ---------------------------------------------------------------------------
+# Per-session views: one job, no Exchange, same answers as the compositions
+# ---------------------------------------------------------------------------
+
+import pytest  # noqa: E402
+
+from tests.conftest import SF_ORACLE as SF_SERVED  # noqa: E402
+REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
+
+
+@pytest.fixture(scope="module")
+def served(spark):
+    """The sf0.01 views, cached the way a serving process caches them
+    (dropped from the cache again after this module)."""
+    from server_spark.serving_gate import warm_cache
+
+    warm_cache(spark, SF_SERVED)
+    views = api.views(spark, SF_SERVED)
+    yield views
+    for name in views.names:
+        getattr(views, name).unpersist()
+
+
+def _exchanges(spark, df) -> list[str]:
+    """Names of the Exchange nodes in ``df``'s executed plan. Cached
+    relations are leaves here: their own build plan is not part of a
+    request."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    found, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif "Exchange" in name or name in (
+            "ShuffleQueryStage", "BroadcastQueryStage"
+        ):
+            found.append(name)
+        elif name == "ResultQueryStage":
+            stack.append(node.plan())
+        else:
+            stack.extend(conv.asJava(node.children()))
+    return found
+
+
+def _one_of_each(spark, sf):
+    """Every subject once, with representative parameters (the
+    auctions subject in both its page and its cursor form)."""
+    after = {"buyout": 50000.0, "item": 8, "owner": 50, "quantity": 25.0,
+             "time_left": "N"}
+    return {
+        "auctions_page": api.query_auctions(spark, sf, api.AuctionsRequest(
+            item_filters=(1, 8, 13), owner_filters=tuple(range(1, 60)),
+            sort_kind="quantity", page=1, count=5)),
+        "auctions_cursor": api.query_auctions(spark, sf, api.AuctionsRequest(
+            item_filters=(1, 8, 13), sort_kind="buyout", count=5,
+            after=after)),
+        "price_list": api.price_list(spark, sf, (1, 21, 34, 55)),
+        "price_list_history": api.price_list_history(
+            spark, sf, (1, 2, 3), "2024-01-01 00:00:00", "2024-02-01 00:00:00"),
+        "owners_query": api.owners_query(spark, sf, "7"),
+        "items_query": api.items_query(spark, sf, "lavender blue"),
+        "realm_status": api.realm_status(spark, sf, "ASIA"),
+        "realm_modification_dates": api.realm_modification_dates(
+            spark, sf, "EUROPE"),
+        "token_history": api.token_history(spark, sf, "AMERICA"),
+        "unmet_demand_list": api.unmet_demand_list(spark, sf, owner_cap=12),
+    }
+
+
+def test_each_subject_is_one_job_without_exchange(spark, served):
+    """Over cached views a request is one job of one stage, and its
+    executed plan moves no rows between partitions."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name, df in _one_of_each(spark, SF_SERVED).items():
+            group = f"test_api.one_job.{name}"
+            sc.setJobGroup(group, name)
+            rows = df.collect()
+            jobs = list(tracker.getJobIdsForGroup(group))
+            assert len(jobs) == 1, f"{name}: jobs {jobs}"
+            # a cached view's build stages stay in the job's DAG, skipped
+            ran = [
+                sid for sid in tracker.getJobInfo(jobs[0]).stageIds
+                if tracker.getStageInfo(sid).numCompletedTasks
+            ]
+            assert len(ran) == 1, f"{name}: stages run {ran}"
+            assert _exchanges(spark, df) == [], name
+            assert rows or name == "auctions_cursor", f"{name}: empty reply"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_views_are_per_session(spark, served):
+    """A new session builds its own views; the memo never hands it the
+    first session's DataFrames."""
+    other = spark.newSession()
+    mine, theirs = api.views(spark, SF_SERVED), api.views(other, SF_SERVED)
+    assert api.views(spark, SF_SERVED) is mine
+    assert theirs is not mine and api.views(other, SF_SERVED) is theirs
+    for name in api.Views.names:
+        assert getattr(theirs, name).sparkSession is other
+        assert getattr(mine, name).sparkSession is spark
+    assert (
+        api.realm_status(other, SF_SERVED, "ASIA").collect()
+        == api.realm_status(spark, SF_SERVED, "ASIA").collect()
+    )
+
+
+def _same_rows(got, want) -> bool:
+    import math
+
+    def close(a, b):
+        if isinstance(a, float) and isinstance(b, float):
+            return math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-9)
+        return a == b
+
+    return len(got) == len(want) and all(
+        len(g) == len(w) and all(map(close, g, w)) for g, w in zip(got, want)
+    )
+
+
+@given(
+    owner_cap=st.one_of(st.just(-1), st.integers(min_value=0, max_value=40)),
+    limit=st.integers(min_value=1, max_value=120),
+    items=st.lists(
+        st.integers(min_value=0, max_value=2100), min_size=1, max_size=8,
+        unique=True,
+    ),
+    region=st.sampled_from((*REGIONS, "ATLANTIS", None)),
+)
+@example(owner_cap=-1, limit=120, items=[1, 2], region="ATLANTIS")
+@example(owner_cap=-1, limit=5, items=[3], region=None)
+@_PROP_SETTINGS
+def test_views_match_per_request_compositions(
+    spark, served, owner_cap, limit, items, region
+):
+    """The view-backed subjects answer exactly what the per-request
+    compositions they replace answer over the raw tables: J5's anti
+    join, price_stats over the filtered auctions, the events ⋈
+    customer ⋈ realm aggregate, and W5 filtered by region (None: the
+    mod-dates of every region)."""
+    from pyspark.sql import functions as F
+
+    from server_spark import tables
+    from server_spark.operators import joins
+    from server_spark.queries.timeseries import w5_token_history
+
+    sf = SF_SERVED
+    raw = auctions(spark, sf)
+    part = tables.load(spark, sf, "part").select(
+        F.col("p_partkey").alias("item"), F.col("p_name").alias("item_name")
+    )
+    offered = raw.filter(F.col("owner") <= owner_cap).select("item")
+    want = joins.unmet_demand(part, offered, "item").orderBy("item").limit(limit)
+    got = api.unmet_demand_list(spark, sf, owner_cap=owner_cap, limit=limit)
+    assert got.collect() == want.collect()
+
+    key = lambda r: r["item"]  # noqa: E731
+    want = sorted(ops.price_stats(ops.filter_by_items(raw, items)).collect(), key=key)
+    got = sorted(api.price_list(spark, sf, items).collect(), key=key)
+    assert _same_rows(got, want)
+
+    cust = tables.load(spark, sf, "customer").select(
+        F.col("c_custkey").alias("user_id"), F.col("c_nationkey").alias("realm_id")
+    )
+    realms = tables.load(spark, sf, "nation").join(
+        tables.load(spark, sf, "region"), F.col("n_regionkey") == F.col("r_regionkey")
+    ).select(
+        F.col("r_name").alias("region_name"), F.col("n_nationkey").alias("realm_id"),
+        F.col("n_name").alias("realm_name"),
+    )
+    if region is not None:
+        realms = realms.filter(F.col("region_name") == region)
+    want = (
+        tables.load(spark, sf, "events")
+        .join(cust.join(realms, "realm_id"), "user_id")
+        .groupBy("region_name", "realm_id", "realm_name")
+        .agg(F.max("ts").alias("last_modified"), F.min("ts").alias("first_seen"),
+             F.count("*").alias("n_events"))
+        .orderBy("region_name", "realm_id")
+    )
+    got = api.realm_modification_dates(spark, sf, region)
+    assert got.collect() == want.collect()
+    if region is None:
+        return
+
+    want = w5_token_history(spark, sf).filter(F.col("region_name") == region)
+    got = api.token_history(spark, sf, region)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    if region == "ATLANTIS":
+        assert not got.collect()

@@ -790,6 +790,22 @@ def test_coreness_matches_bruteforce(spark, edges):
     assert got == want
 
 
+def test_coreness_raises_when_rounds_run_out(spark):
+    """A path's degree-2 interior learns its coreness of 1 one hop per
+    round from the ends, so two rounds cannot settle a 12-node path:
+    coreness must raise instead of returning the unsettled values."""
+    import pytest
+
+    from server_spark.queries.joins_sets import coreness
+
+    path = [(i, i + 1) for i in range(11)]
+    df = spark.createDataFrame(path, "s long, t long")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        coreness(df, max_rounds=2)
+    got = {r["item"]: r["coreness"] for r in coreness(df).collect()}
+    assert got == _peel_coreness(set(path))
+
+
 # ---------------------------------------------------------------------------
 # t33 Kaplan–Meier: distributed estimator vs sequential reference
 # ---------------------------------------------------------------------------
