@@ -5,10 +5,8 @@ Boundaries fall where the rolling ``W``-gram hash ≡ 0 (mod
 SHIFT-INVARIANT: insert a sentence at the top of a mirrored document
 and fixed-size chunks (x102) all change, but CDC boundaries
 re-synchronize after one chunk, so the mirror still dedups. Shared by
-the batch profile query (x117_cdc_chunks) and the streaming fold
-(streaming.pipeline.cdc_profile_stream), so both compute the
-IDENTICAL chunk relation and the streaming state folds to exactly the
-batch answer.
+the profile query (x117_cdc_chunks) and the decontamination query
+(x121), so both compute the IDENTICAL chunk relation.
 """
 
 from __future__ import annotations
@@ -82,64 +80,6 @@ def cdc_chunk_table(docs: DataFrame) -> DataFrame:
                 " ",
             )
         ).alias("chunk_hash"),
-    )
-
-
-def cdc_state_delta(docs: DataFrame) -> DataFrame:
-    """A batch's MERGEABLE chunk-state delta: per (chunk_hash, source)
-    the chunk count and token sum. Counts ADD (associative +
-    commutative), so replay order can't change the folded state —
-    the mergeable-gold contract."""
-    return cdc_chunk_table(docs).groupBy("chunk_hash", "source").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum("n_tokens").alias("sum_tokens"),
-    )
-
-
-def merge_cdc_state(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """Fold a delta into the standing (chunk_hash, source) state."""
-    return (
-        base.unionByName(delta)
-        .groupBy("chunk_hash", "source")
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.sum("sum_tokens").alias("sum_tokens"),
-        )
-    )
-
-
-def cdc_profile_from_state(state: DataFrame) -> DataFrame:
-    """The x117-shaped per-source profile off the folded state —
-    chunk counts, distinct types, internal dup share, mean chunk
-    length, cross-source share (weighted by chunk occurrences,
-    identical to computing over the full concatenated corpus)."""
-    from server_spark.parity import r4
-
-    spread = state.groupBy("chunk_hash").agg(
-        F.countDistinct("source").alias("n_sources")
-    )
-    return (
-        state.join(spread, "chunk_hash")
-        .groupBy("source")
-        .agg(
-            F.sum("n_chunks").alias("n_chunks"),
-            F.count("*").alias("n_chunk_types"),
-            r4(
-                1.0
-                - F.count("*").cast("double") / F.sum("n_chunks")
-            ).alias("dup_chunk_share"),
-            r4(
-                F.sum("sum_tokens").cast("double") / F.sum("n_chunks")
-            ).alias("mean_chunk_tokens"),
-            r4(
-                F.sum(
-                    F.when(F.col("n_sources") > 1, F.col("n_chunks"))
-                    .otherwise(0)
-                ).cast("double")
-                / F.sum("n_chunks")
-            ).alias("cross_source_share"),
-        )
-        .orderBy("source")
     )
 
 

@@ -34,11 +34,3 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             F.count("*").alias("n_docs"),
         )
     )
-
-
-def deduplicated(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """The surviving documents (canonical row per content hash)."""
-    groups = exact_dedup_groups(docs, id_col).select(
-        F.col("canonical_doc_id").alias(id_col)
-    )
-    return docs.join(groups, id_col, "left_semi")

@@ -3,13 +3,9 @@ scale path: signature computation is one hash-agg over the shingle
 relation, banding turns the quadratic candidate search into an
 equi-join on (band, band_hash).
 
-Two implementations:
-- ``minhash_candidates`` (native, default): universal-hash minhash
-  entirely in JVM built-ins — xxhash64 shingle hashing, k min-aggs in
-  one shuffle, banded equi-join, signature-agreement Jaccard estimate.
-- ``minhash_candidates_ml``: Spark ML MinHashLSH + HashingTF variant
-  (kept for API parity with ML pipelines; ~10× slower on small data
-  due to approxSimilarityJoin overhead).
+``minhash_candidates``: universal-hash minhash entirely in JVM
+built-ins — xxhash64 shingle hashing, k min-aggs in one shuffle,
+banded equi-join, signature-agreement Jaccard estimate.
 
 Engine-specific hashing → no DuckDB oracle (rows-only); correctness
 is asserted in tests against exact Jaccard (dedup/ngram.py).
@@ -22,7 +18,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from server_spark.barrier import barrier, lazy_barrier
+from server_spark.barrier import lazy_barrier
 
 from server_spark.dedup.ngram import word_shingles
 
@@ -544,68 +540,6 @@ def md5_kv_sql(
     return f"""
     vals AS (SELECT doc_id, {md5_value_sql('shingle')} AS v FROM {sh_cte}),
     sigs AS (SELECT doc_id, {md5_sigs_sql(coeffs)} FROM vals GROUP BY doc_id),{kv_sql}"""
-
-
-def shingle_vectors(
-    docs: DataFrame,
-    n: int = 3,
-    num_features: int = 1 << 18,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Sparse shingle-presence vectors for MinHashLSH.
-
-    Shingling goes through the ONE shared n-gram kernel
-    (:func:`server_spark.dedup.ngram.shingle_array`) — an earlier
-    inline copy diverged on docs shorter than ``n`` words, emitting a
-    malformed sub-n shingle where the native minhash path drops the
-    doc (r11 review finding). Distinct grams + ``binary=True`` TF is
-    exactly shingle-set presence."""
-    from pyspark.ml.feature import HashingTF
-
-    from server_spark.dedup import ngram as ng
-
-    # word n-grams as array column (JVM-side transform; no Python UDF)
-    shingles = docs.select(
-        F.col(id_col), ng.split_words(text_col).alias("_words")
-    ).select(
-        id_col, ng.shingle_array("_words", n).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-    tf = HashingTF(
-        inputCol="shingles", outputCol="features", numFeatures=num_features,
-        binary=True,
-    )
-    return tf.transform(shingles)
-
-
-def minhash_candidates_ml(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    max_distance: float = 0.8,
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """ML-pipeline variant: candidate pairs via Spark ML MinHashLSH
-    approxSimilarityJoin (jaccard_est = 1 - lsh distance)."""
-    from pyspark.ml.feature import MinHashLSH
-
-    vecs = shingle_vectors(docs, n=n, id_col=id_col)
-    mh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hashes,
-        seed=seed,
-    )
-    model = mh.fit(vecs)
-    pairs = model.approxSimilarityJoin(vecs, vecs, max_distance, distCol="jaccard_dist")
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("doc_a"),
-            F.col(f"datasetB.{id_col}").alias("doc_b"),
-            (1 - F.col("jaccard_dist")).alias("jaccard_est"),
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
 
 
 def hash_value_neardup_pairs(

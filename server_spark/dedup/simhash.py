@@ -4,8 +4,7 @@
 contributions across tokens, take the sign per bit. Near-dups have
 small Hamming distance between fingerprints. Everything stays in
 JVM built-ins: xxhash64 for token hashes, bit arithmetic via shifts —
-no Python UDF, so at 100 TB this is a pure narrow map over documents
-followed by (optionally) a banded self-join on fingerprint prefixes.
+no Python UDF, so at 100 TB this is a pure narrow map over documents.
 
 Engine-specific hash (Spark xxhash64) → rows-only for the oracle;
 semantics asserted in unit tests (identical docs → identical
@@ -57,71 +56,3 @@ def simhash64(
         "CAST(0 AS BIGINT) | " + " | ".join(bit_terms)
     )
     return sums.select(F.col(id_col), fingerprint.alias("simhash"))
-
-
-def hamming_pairs(
-    fingerprints: DataFrame, max_distance: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Pairs within Hamming distance. Exact form is a self cross-join —
-    fine at test scale; the scale path bands the 64 bits into k chunks
-    (near-dups within d bits must share ≥1 of d+1 chunks exactly) and
-    equi-joins per chunk."""
-    a = fingerprints.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("ha"))
-    b = fingerprints.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("hb"))
-    return (
-        a.join(b, F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_distance)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
-def banded_hamming_pairs(
-    fingerprints: DataFrame, max_distance: int, n_bands: int = 4,
-    id_col: str = "doc_id", max_bucket: int | None = None,
-) -> DataFrame:
-    """Scale path: band the 64-bit fingerprint into ``n_bands`` chunks;
-    any pair within ``max_distance < n_bands`` Hamming bits must agree
-    exactly on at least one chunk (pigeonhole). Candidates come from
-    the shared :func:`server_spark.dedup.minhash.bucket_pairs` kernel
-    — ONE shuffle (bucket per (band, chunk) + narrow pair expansion),
-    not the kv self-join this used before r11, which shuffled the
-    banded relation twice and had no hot-bucket guard (one degenerate
-    chunk value, e.g. the all-zero band of short docs, exploded into
-    m²/2 join rows). The fingerprint rides the expansion as payload,
-    so the exact bit_count verify needs no re-join."""
-    from server_spark.dedup.minhash import bucket_pairs
-
-    width = 64 // n_bands
-    banded = fingerprints.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftrightunsigned("simhash", i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bc"),
-    ).select(id_col, "simhash", "bc.band", "bc.chunk")
-    pairs = bucket_pairs(
-        banded,
-        ["band", "chunk"],
-        id_col=id_col,
-        payload=("simhash",),
-        max_bucket=max_bucket,
-    )
-    return (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select("doc_a", "doc_b", "hamming")
-    )

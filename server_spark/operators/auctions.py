@@ -58,12 +58,6 @@ def collapse_mini_auctions(auctions: DataFrame) -> DataFrame:
     )
 
 
-def with_buyout_per(auctions: DataFrame) -> DataFrame:
-    """F4 — per-unit price projection (float division of the copper
-    amounts, like the Go `float64(buyout) / float64(quantity)`)."""
-    return auctions.withColumn("buyout_per", F.col("buyout") / F.col("quantity"))
-
-
 def price_stats(
     auctions: DataFrame,
     group_keys: Sequence[str] = ("item",),

@@ -21,42 +21,6 @@ def bucket(df: DataFrame, ts: str, unit: str) -> Column:
     return F.date_trunc(unit, F.col(ts))
 
 
-def bucketed_stats(
-    df: DataFrame, ts: str, unit: str, keys: list[str], value: str
-) -> DataFrame:
-    """W1/W2 — one stats row per (entity, bucket): the pricelist-
-    history append re-expressed as a grouped aggregation."""
-    return (
-        df.groupBy(*keys, bucket(df, ts, unit).alias("bucket_ts"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min(value).alias("min_value"),
-            F.max(value).alias("max_value"),
-            F.avg(value).alias("avg_value"),
-            F.sum(value).alias("sum_value"),
-        )
-    )
-
-
-def lag_delta(
-    series: DataFrame, keys: list[str], ts: str, value: str
-) -> DataFrame:
-    """W3 — per-entity delta vs previous bucket (price trend)."""
-    w = Window.partitionBy(*keys).orderBy(ts)
-    prev = F.lag(value).over(w)
-    return series.withColumn("prev_value", prev).withColumn(
-        "delta", F.col(value) - prev
-    )
-
-
-def moving_avg(
-    series: DataFrame, keys: list[str], ts: str, value: str, width: int
-) -> DataFrame:
-    """W4 — trailing moving average over the last ``width`` buckets."""
-    w = Window.partitionBy(*keys).orderBy(ts).rowsBetween(-(width - 1), 0)
-    return series.withColumn("moving_avg", F.avg(value).over(w))
-
-
 def watermark_dedup(
     df: DataFrame, keys: list[str], order: list[Column]
 ) -> DataFrame:
@@ -107,13 +71,6 @@ def sessionize(
         F.max(ts).alias("session_end"),
         F.count("*").alias("n_events"),
     )
-
-
-def retention_filter(df: DataFrame, ts: str, cutoff) -> DataFrame:
-    """P7/T7 — RetentionLimit pruning: at scale this predicate lands on
-    a date partition column and becomes partition pruning, the exact
-    analog of the reference deleting expired Bolt keys."""
-    return df.filter(F.col(ts) >= cutoff)
 
 
 def km_curve(dur: DataFrame) -> DataFrame:

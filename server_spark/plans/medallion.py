@@ -892,15 +892,6 @@ def prune_retention(
     )
 
 
-def run_all(spark: SparkSession, raw: DataFrame, root: str) -> MedallionPaths:
-    paths = MedallionPaths(root)
-    ingest_bronze(spark, raw, paths)
-    build_silver(spark, paths)
-    build_gold_prices(spark, paths)
-    build_gold_churn(spark, paths)
-    return paths
-
-
 def compact_small_files(
     spark: SparkSession,
     table_dir: str,

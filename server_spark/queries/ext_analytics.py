@@ -1325,9 +1325,6 @@ def a50_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A51 — tail risk: exact VaR / CVaR of unit prices per time_left
 # ---------------------------------------------------------------------------
 
-_A51_Q = 0.95  # tail level
-
-
 @register(
     "a51_tail_risk",
     auctions_sql(

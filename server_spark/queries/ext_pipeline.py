@@ -1093,17 +1093,6 @@ def x101_mixture_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x112 — quality-filter attribution (which rule does the work?)
 # ---------------------------------------------------------------------------
 
-# Five INDEPENDENT binary rules (unlike x18's first-fail verdict):
-# attribution needs every rule evaluated on every doc.
-_X112_RULES_SQL = {
-    "too_short": "n_tokens < 40",
-    "too_long": "n_tokens > 300",
-    "low_alpha": "alpha_ratio < 0.55",
-    "repetitive": "2 * n_distinct < n_tokens",
-    "tiny": "n_chars < 200",
-}
-
-
 @register(
     "x112_filter_attribution",
     r"""

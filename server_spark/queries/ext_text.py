@@ -792,7 +792,7 @@ def x40_quality_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow-map metrics: tokens, alpha, repetition (gram array vs
     # its distinct form — no explode). Shingles come from the ONE
     # shared n-gram kernel (an inline copy here re-opened the
-    # short-doc drift class shingle_vectors already closed — r11
+    # short-doc drift class the shared kernel already closed — r11
     # review finding), and both divisions are try_divide so a
     # sub-3-word or empty doc yields the coalesced default instead of
     # aborting the gate under ANSI mode.

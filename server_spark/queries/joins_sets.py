@@ -767,9 +767,9 @@ assert "WITH RECURSIVE" in _A20_SQL, (
     "components (centrality: which items anchor the market graph). "
     "Scale shape: each iteration is ONE join of the rank vector "
     "(nodes-sized) to the edge list plus a hash-agg — the classic "
-    "Pregel-as-joins form; lineage is cut through barrier() every "
-    "iteration so 10 rounds never stack into one mega-plan (flips to "
-    "reliable checkpoints under SPARK_GRAFT_CHECKPOINT_DIR). "
+    "Pregel-as-joins form; lineage is cut through a lazy barrier every "
+    "third iteration so 10 rounds never stack into one mega-plan (flips "
+    "to reliable checkpoints under SPARK_GRAFT_CHECKPOINT_DIR). "
     "Deterministic: fixed iterations, dangling mass redistributed "
     "uniformly, 4-decimal canonical output; pinned against a "
     "plain-Python reference in tests.",
@@ -1724,7 +1724,8 @@ def coreness(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
     neighbors' current values (the largest h such that ≥ h neighbors
     have value ≥ h); the fixpoint is exactly the k-core number. The
     same barrier-per-round + convergence-count skeleton as connected
-    components / PageRank — each round is one adjacency join and one
+    components (PageRank instead runs a fixed 10 rounds with no
+    convergence count) — each round is one adjacency join and one
     degree-bounded window per node, no global state, so the iteration
     distributes at any scale (rounds needed ≈ graph's core hierarchy
     depth, typically ≪ diameter). Returns (item, coreness)."""
@@ -1928,7 +1929,8 @@ def a35_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE runs their stages concurrently where the serial form ran
     # three range exchanges (sample job + shuffle each) back to back.
     # Rank values are identical (same total orders, same tiebreak);
-    # interleaved A/B: 1.86 -> 1.62 s median (scripts/exp_r15b.py).
+    # interleaved A/B: 1.86 -> 1.62 s median (scripts/exp_r15b.py at
+    # commit 8de34ac).
     rr = global_row_number(
         cust.select("custkey", "recency_days"),
         [F.col("recency_days").desc(), F.col("custkey")],

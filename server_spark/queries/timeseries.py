@@ -4388,7 +4388,8 @@ def t44_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_analytics.py::test_t44_terminal_sink_matches_oracle).
     # Interleaved A/B on the harness data, which has no such chain:
     # 2.16 -> 0.97 s median with bit-identical output
-    # (scripts/exp_r15b.py t44A/t44B); oracle hash-green at every sf.
+    # (scripts/exp_r15b.py t44A/t44B at commit 8de34ac); oracle
+    # hash-green at every sf.
     one = (
         p.agg(
             F.sort_array(F.collect_set("s")).alias("ss"),
@@ -5373,7 +5374,6 @@ def t51_effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _T52_SEG = 7    # PAA segment length (days) — weekly granule
-_T52_GRAM = 3   # motif = this many consecutive segment letters
 # breakpoints for a 4-letter alphabet under N(0,1): quartiles
 _T52_BP = (-0.6745, 0.0, 0.6745)
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from server_spark.barrier import barrier, lazy_barrier
+from server_spark.barrier import lazy_barrier
 
 from server_spark.parity import r4
 
@@ -374,29 +374,6 @@ def neardup_pairs_blocked_grouped(
     return grid.mapInPandas(
         score, "cluster_id long, vec_a long, vec_b long, score double"
     )
-
-
-def hyperplane_signature(
-    vec_col: str | Column, planes: list[list[float]]
-) -> Column:
-    """LSH bucket id: sign bits of projections onto random hyperplanes
-    packed into a long. Pure JVM expression — a narrow map at any scale."""
-    bits = []
-    for i, p in enumerate(planes):
-        # unrolled codegen sum (see dot_fixed) — the fold form leaves
-        # whole-stage codegen and is ~20× slower per signature
-        terms = [
-            F.element_at(vec_col, j + 1).cast("double") * F.lit(float(x))
-            for j, x in enumerate(p)
-        ]
-        proj = terms[0]
-        for t in terms[1:]:
-            proj = proj + t
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("long")
 
 
 def _with_signatures(

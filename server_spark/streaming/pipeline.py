@@ -6,11 +6,10 @@ the streaming re-expression is:
     file source (new dump files appear)           = T1 trigger
     withWatermark + dropDuplicates on dump key    = T2 watermark dedup
     window(dump_ts, 1h) price aggregation         = T3 tumbling agg
-    transformWithStateInPandas / applyInPandas-
-    WithState per-item price state                = T5 stateful churn
 
-Batch jobs remain the primary orchestration (BASELINE.json); these
-pipelines prove the same operators run incrementally with checkpoints
+T5 (per-item price churn) runs as a batch operator. Batch jobs remain
+the primary orchestration (BASELINE.json); these pipelines prove the
+same operators run incrementally with checkpoints
 — on a cluster you'd point the source at the landing bucket and the
 sink at the gold table, and the medallion becomes continuous.
 
@@ -84,91 +83,6 @@ def hourly_price_stream(stream: DataFrame, late: str | None = None) -> DataFrame
     )
 
 
-def session_stream(
-    stream: DataFrame, gap: str = "30 minutes", late: str = "1 hour"
-) -> DataFrame:
-    """T4 (streaming) — per-owner activity sessions over the dump
-    stream via the NATIVE session_window: a session closes (and, in
-    append mode, emits) once the watermark passes its gap-extended
-    end. State is one open session per (owner) key, bounded by the
-    watermark — the streaming twin of the batch t4b query."""
-    return (
-        stream.withWatermark("dump_ts", late)
-        .groupBy("owner", F.session_window("dump_ts", gap).alias("sw"))
-        .agg(F.count("*").alias("n_auctions"))
-        .select(
-            "owner",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_auctions",
-        )
-    )
-
-
-def price_delta_stateful(stream: DataFrame) -> DataFrame:
-    """T5 — custom stateful operator: per (region, realm, item), track
-    the last observed average price across micro-batches and emit the
-    delta vs the previous snapshot (the reference's prev-vs-next churn
-    state, kept in the streaming state store instead of Bolt).
-
-    Implemented with applyInPandasWithState; state = (last_avg,).
-    All logic is defined inside the closure (workers must not need
-    server_spark importable).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "region string, realm_slug string, item long, dump_ts timestamp, "
-        "avg_buyout_per double, prev_avg double, delta double"
-    )
-    state_schema = "last_avg double"
-
-    # NB: Spark disallows applyInPandasWithState AFTER a streaming
-    # aggregation, so the per-snapshot averaging happens inside the
-    # stateful function (each group's rows per micro-batch are one
-    # realm-item's auctions — small by construction).
-    base = (
-        stream.filter(F.col("buyout") > 0)
-        .withWatermark("dump_ts", "2 hours")
-        .select(
-            "region", "realm_slug", "item", "dump_ts",
-            (F.col("buyout") / F.col("quantity")).alias("per"),
-        )
-    )
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        rows = pd.concat(list(pdfs))
-        snaps = (
-            rows.groupby("dump_ts", as_index=False)["per"].mean()
-            .sort_values("dump_ts")
-        )
-        last = state.get[0] if state.exists else None
-        out = []
-        for r in snaps.itertuples():
-            prev = last
-            delta = None if prev is None else r.per - prev
-            out.append((key[0], key[1], key[2], r.dump_ts, r.per, prev, delta))
-            last = r.per
-        state.update((float(last),))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "region", "realm_slug", "item", "dump_ts",
-                "avg_buyout_per", "prev_avg", "delta",
-            ],
-        )
-
-    return base.groupBy("region", "realm_slug", "item").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_ingest_with_manifest(
     spark: SparkSession, input_dir: str, paths, checkpoint_dir: str
 ):
@@ -198,64 +112,6 @@ def stream_ingest_with_manifest(
     )
 
 
-def auction_lifetime_stream(
-    posts: DataFrame,
-    removals: DataFrame,
-    within_hours: int = 2,
-    join_type: str = "inner",
-) -> DataFrame:
-    """Stream-stream interval join: each posted auction matched to the
-    removal event that ends it, yielding time-to-sale rows.
-
-    Both sides carry a watermark of ``within_hours`` and the join
-    condition bounds ``removed_ts`` to [posted_ts, posted_ts + bound],
-    so Spark can expire buffered state on BOTH sides once the
-    watermark passes the interval — state stays O(in-flight auctions)
-    instead of growing with the stream (the requirement for any
-    stream-stream join at 100 TB/day ingest).
-
-    ``join_type``: "inner" (default) emits a row as soon as both
-    events have arrived; "leftOuter" ADDITIONALLY emits every
-    still-unmatched post with NULL removal columns once the watermark
-    has passed its join interval — the UNSOLD-auction feed (a listing
-    that survived its whole window unsold is a signal row, not an
-    absence), the canonical use of Spark's outer stream-stream join:
-    the NULL row can only emit after state for that post is provably
-    complete, which is why the watermark is mandatory here and not
-    just an optimization. Both modes are append-only (never
-    retracted).
-
-    ``posts`` needs (auc, item, buyout, dump_ts); ``removals`` needs
-    (auc, removed_ts) — e.g. the anti-join output of consecutive
-    snapshot diffs landed as its own event stream.
-    """
-    bound = f"{within_hours} hours"
-    p = posts.select(
-        "auc", "item", "buyout", F.col("dump_ts").alias("posted_ts")
-    ).withWatermark("posted_ts", bound)
-    r = removals.select(
-        F.col("auc").alias("r_auc"), "removed_ts"
-    ).withWatermark("removed_ts", bound)
-    joined = p.join(
-        r,
-        F.expr(
-            f"auc = r_auc AND removed_ts >= posted_ts "
-            f"AND removed_ts <= posted_ts + INTERVAL {within_hours} HOURS"
-        ),
-        join_type,
-    )
-    return joined.select(
-        "auc",
-        "item",
-        "buyout",
-        "posted_ts",
-        "removed_ts",
-        (
-            F.col("removed_ts").cast("long") - F.col("posted_ts").cast("long")
-        ).alias("seconds_listed"),
-    )
-
-
 def run_to_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str, mode: str = "append"
 ):
@@ -270,258 +126,6 @@ def run_to_parquet(
         .outputMode(mode)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def incremental_dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    base_docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Streaming twin of x38: classify ARRIVING documents against the
-    standing corpus as exact_dup / unique as they land.
-
-    The base corpus is reduced to its normalized-content hash set ONCE
-    (a static relation; at scale a maintained bronze-side table) and
-    joined into every micro-batch — a stream-static broadcast hash
-    join, no state store needed because the corpus side is the state.
-    The hash set is BARRIERED (checkpointed) so the scan + sha2 +
-    distinct over the standing corpus runs once, not once per
-    micro-batch — stream-static joins re-resolve the static plan
-    every batch, and per-batch ingest latency must not scale with
-    corpus size (r11 review finding; same fix as
-    decontaminate_stream's train side). The near-dup path (banded
-    minhash candidates, x38's batch×base shape) runs the same way in
-    foreachBatch in production; kept to the exact tier here so the
-    streaming test stays sub-second.
-    """
-    from server_spark.barrier import barrier
-    from server_spark.dedup import exact as ex
-
-    base_hashes = barrier(
-        base_docs.select(ex.text_hash().alias("h"))
-        .distinct()
-        .withColumn("_in_base", F.lit(1))
-    )
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    classified = (
-        stream.withColumn("h", ex.text_hash())
-        .join(F.broadcast(base_hashes), "h", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_in_base").isNotNull(), "exact_dup")
-            .otherwise("unique")
-            .alias("verdict"),
-        )
-    )
-    return (
-        classified.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def index_assign_stream(
-    spark: SparkSession,
-    input_dir: str,
-    index,
-    out_dir: str,
-    checkpoint_dir: str,
-    base_mean_d2: float,
-):
-    """Streaming twin of x51: ARRIVING embedding batches assigned to
-    the STANDING ANN index as they land — continuous index
-    maintenance. The quantizer (centroids) is model state captured in
-    the closure, exactly the stream-static posture of
-    :func:`incremental_dedup_stream` (the corpus-side state is the
-    index; no state store). Each micro-batch appends inverted-list
-    rows plus its drift ratio, so the rebuild trigger becomes a
-    monitorable column in the sink instead of an offline check.
-
-    JSON-source note: embeddings arrive as ``array<double>`` — at
-    scale the landing files are parquet and the schema is the
-    embeddings contract; JSON keeps the streaming test hermetic.
-    """
-    from server_spark.similarity.ivf import assign_batch
-
-    stream = (
-        spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>")
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = assign_batch(index, batch_df).select(
-            "vec_id",
-            "cluster",
-            "_nrm",
-            (F.col("_d2") / F.lit(max(base_mean_d2, 1e-12))).alias(
-                "d2_ratio"
-            ),
-        )
-        out.write.mode("append").parquet(out_dir)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def price_delta_tws(stream: DataFrame) -> DataFrame:
-    """T5, modern form — the same per-(region, realm, item) prev-vs-
-    next delta as ``price_delta_stateful``, on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor + typed state
-    handles). Worth carrying both: the new API runs on the RocksDB
-    state-store provider (required; set on the session before
-    starting), supports state schema evolution and multiple typed
-    state variables per key, and is where Spark's stateful roadmap
-    lives — applyInPandasWithState is the maintenance twin.
-
-    Runtime deps: the RocksDB state-store provider AND the protobuf
-    package (the API's Python↔JVM state server wire format). The
-    test skips where protobuf isn't installed; this container
-    doesn't ship it, so the applyInPandasWithState form remains the
-    exercised production path here.
-
-    The processor class is defined INSIDE the closure so workers never
-    need server_spark importable (same pickling posture as the
-    pandas_udf queries)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        "region string, realm_slug string, item long, dump_ts timestamp, "
-        "avg_buyout_per double, prev_avg double, delta double"
-    )
-
-    class PriceDelta(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_avg", "last_avg double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            batch = pd.concat(list(rows))
-            snaps = (
-                batch.groupby("dump_ts", as_index=False)["per"].mean()
-                .sort_values("dump_ts")
-            )
-            got = self._last.get()
-            last = got[0] if got is not None else None
-            out = []
-            for r in snaps.itertuples():
-                prev = last
-                delta = None if prev is None else r.per - prev
-                out.append(
-                    (key[0], key[1], key[2], r.dump_ts, r.per, prev, delta)
-                )
-                last = r.per
-            self._last.update((float(last),))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "region", "realm_slug", "item", "dump_ts",
-                    "avg_buyout_per", "prev_avg", "delta",
-                ],
-            )
-
-        def close(self) -> None:
-            pass
-
-    base = (
-        stream.filter(F.col("buyout") > 0)
-        .withWatermark("dump_ts", "2 hours")
-        .select(
-            "region", "realm_slug", "item", "dump_ts",
-            (F.col("buyout") / F.col("quantity")).alias("per"),
-        )
-    )
-    return base.groupBy(
-        "region", "realm_slug", "item"
-    ).transformWithStateInPandas(
-        statefulProcessor=PriceDelta(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def enrich_stream_with_items(
-    stream: DataFrame, items: DataFrame
-) -> DataFrame:
-    """Stream-static join: each micro-batch of auction events is
-    enriched against the item dimension — Spark's answer to Flink's
-    broadcast-state pattern. The static side is re-resolved per
-    micro-batch (a dim table updated between batches is picked up
-    automatically — no restart), it never buffers in the state store,
-    and with a dim under the broadcast threshold each batch plans a
-    broadcast hash join: zero streaming state, zero shuffle of the
-    stream side.
-
-    ``items`` needs (item, item_name); extra columns pass through."""
-    return stream.join(F.broadcast(items), "item", "left")
-
-
-def attribution_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    within_hours: int = 1,
-    bucket: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join FOLLOWED BY a windowed aggregate —
-    two chained stateful operators (Spark 3.5+ multi-stateful
-    pipelines): purchases are attributed to the same user's click in
-    the preceding ``within_hours``, then attributed revenue rolls up
-    per tumbling ``bucket`` on the purchase time. Batch twin:
-    t15_interval_join (queries/timeseries.py).
-
-    Both inputs carry watermarks, so join state expires once the
-    watermark passes the interval AND the downstream window state
-    closes one watermark later — end-to-end state stays
-    O(in-flight interval + open buckets). Append mode: a bucket emits
-    once, when the watermark passes its end.
-
-    ``clicks`` needs (user_id, ts); ``purchases`` needs
-    (user_id, ts, value).
-    """
-    bound = f"{within_hours} hours"
-    c = clicks.select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts")
-    ).withWatermark("click_ts", bound)
-    p = purchases.select(
-        "user_id", F.col("ts").alias("p_ts"), "value"
-    ).withWatermark("p_ts", bound)
-    attributed = p.join(
-        c,
-        F.expr(
-            f"user_id = c_user AND p_ts >= click_ts "
-            f"AND p_ts <= click_ts + INTERVAL {within_hours} HOURS"
-        ),
-        "left_semi",  # attribution test: was there a qualifying click?
-    )
-    return (
-        attributed.groupBy(F.window("p_ts", bucket))
-        .agg(
-            F.count("*").alias("n_attributed"),
-            F.sum("value").alias("attributed_value"),
-        )
-        .select(
-            F.col("window.start").alias("bucket_ts"),
-            "n_attributed",
-            "attributed_value",
-        )
     )
 
 
@@ -561,687 +165,3 @@ def use_rocksdb_state(spark, changelog: bool = True) -> None:
 def use_default_state(spark) -> None:
     """Revert to the HDFS-backed (JVM heap) provider."""
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def listing_expiry_stream(stream: DataFrame, ttl_hours: int = 2) -> DataFrame:
-    """T16 — TIMEOUT-driven stateful emission: an auction that stops
-    appearing in dumps is declared EXPIRED-UNSOLD once the event-time
-    watermark passes its last sighting + ``ttl_hours`` — the
-    reference's timeLeft expiry, detected by ABSENCE of data. Unlike
-    every other stateful operator here (which emit on arriving rows),
-    this one emits on ``state.hasTimedOut``: per-key state carries
-    (first_seen, last_seen, item, buyout), each sighting pushes the
-    timeout timestamp forward, and only the watermark — never a row —
-    produces output. State stays O(live listings): every key either
-    refreshes or times out and is removed.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ttl_ms = ttl_hours * 3600 * 1000
-    out_schema = (
-        "auc long, item long, buyout long, "
-        "first_seen timestamp, last_seen timestamp"
-    )
-    state_schema = (
-        "first_seen timestamp, last_seen timestamp, item long, buyout long"
-    )
-    base = stream.withWatermark("dump_ts", "0 seconds").select(
-        "auc", "item", "buyout", "dump_ts"
-    )
-
-    def update(key, pdfs, state, _ttl_ms=ttl_ms):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            first_seen, last_seen, item, buyout = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [(key[0], item, buyout, first_seen, last_seen)],
-                columns=[
-                    "auc", "item", "buyout", "first_seen", "last_seen"
-                ],
-            )
-            return
-        rows = pd.concat(list(pdfs))
-        lo, hi = rows["dump_ts"].min(), rows["dump_ts"].max()
-        if state.exists:
-            first_seen, last_seen, item, buyout = state.get
-            lo = min(lo, first_seen)
-            hi = max(hi, last_seen)
-        else:
-            item = int(rows["item"].iloc[0])
-            buyout = int(rows["buyout"].iloc[0])
-        state.update((lo, hi, item, buyout))
-        # expiry clock restarts at the LAST sighting
-        # naive timestamps are UTC wall time (session tz pinned to
-        # UTC); localize explicitly so epoch math never sees the host tz
-        state.setTimeoutTimestamp(
-            int(pd.Timestamp(hi, tz="UTC").timestamp() * 1000) + _ttl_ms
-        )
-        return
-        yield  # pragma: no cover — makes this a generator
-
-    return base.groupBy("auc").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def hot_items_stream(
-    stream: DataFrame, cap: int = 64, min_share: float = 0.05
-) -> DataFrame:
-    """Streaming HOT-KEY monitor: per (region, realm), a bounded
-    Misra-Gries summary of item listing frequencies maintained across
-    micro-batches — the streaming twin of x73's batch heavy-hitters
-    (same merge-truncate arithmetic, same N/(cap+1) undercount bound,
-    Agarwal et al. PODS'12). Each batch folds its item counts into the
-    O(cap) state and emits the items whose estimated share of ALL
-    rows seen so far exceeds ``min_share`` — the ops signal for "one
-    item is flooding this realm's dumps" (market manipulation / bot
-    listing storms) at O(cap) state per realm, where exact per-item
-    counts would grow state with the catalog.
-
-    State = (items array, counts array, total long); all logic inside
-    the closure (workers must not need server_spark importable).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "region string, realm_slug string, item long, est long, "
-        "n_seen long, max_undercount long"
-    )
-    state_schema = "items array<long>, counts array<long>, total long"
-
-    def update(key, pdfs, state, _cap=cap, _share=min_share):
-        import pandas as pd
-
-        counter: dict[int, int] = {}
-        total = 0
-        if state.exists:
-            items, counts, total = state.get
-            counter = dict(zip(items, counts))
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            total += len(pdf)
-            for item, n in pdf["item"].value_counts().items():
-                counter[item] = counter.get(item, 0) + int(n)
-            if len(counter) > _cap:
-                # MG merge-truncate: subtract the (cap+1)-th largest
-                # count everywhere, drop the non-positive tail.
-                pivot = sorted(counter.values(), reverse=True)[_cap]
-                counter = {
-                    k: v - pivot for k, v in counter.items() if v > pivot
-                }
-        state.update(
-            (list(counter), [int(v) for v in counter.values()], int(total))
-        )
-        bound = total // (_cap + 1)
-        hot = [
-            (key[0], key[1], int(it), int(est), int(total), int(bound))
-            for it, est in sorted(counter.items())
-            if est >= _share * total
-        ]
-        yield pd.DataFrame(
-            hot,
-            columns=[
-                "region", "realm_slug", "item", "est", "n_seen",
-                "max_undercount",
-            ],
-        )
-
-    base = stream.select("region", "realm_slug", "item")
-    return base.groupBy("region", "realm_slug").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _epoch_gated_fold_sink(state_dir: str, subdir: str, delta_fn, merge_fn):
-    """THE idempotent-foreachBatch fold recipe, shared by every
-    mergeable streaming gold (bitmap/histogram/CDC): the checkpoint
-    dedupes files across restarts; foreachBatch is at-least-once
-    WITHIN a batch (a crash between the fold and the checkpoint
-    commit replays the batch), so the fold is additionally gated on
-    the epoch id persisted WITH the state. The epoch marker lives
-    INSIDE the swapped state directory (``<subdir>/_epoch`` — the
-    leading underscore keeps it invisible to the parquet reader, like
-    ``_SUCCESS``), so state and epoch commit in ONE atomic rename: a
-    crash anywhere leaves either the old state+old epoch or the new
-    state+new epoch, never a folded state whose epoch says "not yet"
-    (which would double-apply the delta on replay — r11 review
-    finding; a shared ``state_dir/_epoch`` sidecar also made two fold
-    streams over one state_dir clobber each other's gate, and its
-    in-place rewrite could be torn by a crash). The swap itself goes
-    tmp → aside-swap with crash healing so a failure mid-swap leaves
-    a recoverable table. One implementation — a hardening fix here
-    reaches every fold pipeline at once."""
-    import json as _json
-    import os
-    import shutil
-
-    data_dir = os.path.join(state_dir, subdir)
-    aside = f"{data_dir}.old"
-
-    def _epoch_of(d: str) -> int:
-        f = os.path.join(d, "_epoch")
-        try:
-            with open(f) as fh:
-                return int(_json.load(fh)["batch_id"])
-        except (OSError, ValueError, KeyError):
-            pass
-        # Legacy (pre-r11) format: ONE shared ``state_dir/_epoch``
-        # sidecar. State folded under that format has real state but
-        # no in-dir marker — reading it as epoch -1 would let an
-        # at-least-once replay of the last committed batch double-
-        # apply its fold exactly once after the upgrade (r12 advisor
-        # finding). Consult the legacy sidecar READ-ONLY and only
-        # when this subdir's state actually exists: the file was
-        # shared across fold streams, so deleting or migrating it
-        # here would reset the OTHER subdirs' gates, and when the
-        # state dir is absent the sidecar belongs to a sibling
-        # stream, not to this genuinely-first fold. The next fold
-        # writes the in-dir marker atomically with the swap, after
-        # which the legacy file is never consulted for this subdir.
-        #
-        # Known ambiguity (r12 review): the legacy file was
-        # last-writer-wins across CO-LOCATED streams, so if a sibling
-        # wrote a HIGHER epoch than this subdir ever folded, adopting
-        # it gates out the in-between batches. This is not a
-        # regression — under the old format the shared gate made the
-        # second co-located stream skip EVERY fold (the r11 finding
-        # that motivated the in-dir move), so a legacy state_dir has
-        # at most one stream whose state can be trusted; co-located
-        # legacy deployments should rebuild their secondary golds
-        # (deterministic refold from bronze) rather than upgrade them
-        # in place. Nothing on disk distinguishes the two cases, so
-        # the code takes the replay-safe reading for the one stream
-        # the old format actually served.
-        if os.path.isdir(d):
-            legacy = os.path.join(state_dir, "_epoch")
-            try:
-                with open(legacy) as fh:
-                    return int(_json.load(fh)["batch_id"])
-            except (OSError, ValueError, KeyError):
-                pass
-        return -1
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        if os.path.exists(aside):  # heal a crash between swap renames
-            if os.path.exists(data_dir):
-                shutil.rmtree(aside)
-            else:
-                os.rename(aside, data_dir)
-        last = _epoch_of(data_dir)
-        if batch_id <= last:  # replayed epoch — fold already applied
-            return
-        delta = delta_fn(batch_df)
-        if os.path.exists(data_dir):
-            merged = merge_fn(sess.read.parquet(data_dir), delta)
-        else:
-            merged = delta
-        tmp = f"{data_dir}.tmp.{os.getpid()}"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        # epoch rides inside the directory that is about to be swapped
-        with open(os.path.join(tmp, "_epoch"), "w") as fh:
-            _json.dump({"batch_id": int(batch_id)}, fh)
-        if os.path.exists(data_dir):
-            os.rename(data_dir, aside)
-        os.replace(tmp, data_dir)
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-
-    return sink
-
-
-def _mergeable_fold_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    subdir: str,
-    delta_fn,
-    merge_fn,
-):
-    """Generic epoch-gated foreachBatch FOLD of a mergeable summary —
-    the streaming form of the medallion's mergeable golds (bitmaps,
-    log-histograms, sketches: any algebra whose merge is associative +
-    commutative, so replay order can't change the state). State grows
-    with groups × occupied buckets, never with stream history — the
-    100 TB posture of every mergeable gold.
-
-    ``delta_fn(batch_df)`` → the batch's summary table;
-    ``merge_fn(standing_df, delta_df)`` → the folded table.
-    """
-    sink = _epoch_gated_fold_sink(state_dir, subdir, delta_fn, merge_fn)
-    stream = read_auction_stream(spark, input_dir, max_files=1)
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def bitmap_distinct_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    keys: tuple[str, ...] = ("region", "realm_slug"),
-    value_col: str = "item",
-):
-    """Streaming twin of ``maintenance.refresh_item_bitmap_gold`` (r7
-    verdict item 7): EXACT distinct counts maintained across
-    micro-batches by an epoch-gated bitmap OR-fold; incremental ==
-    one-shot COUNT(DISTINCT) at every batch boundary (tested)."""
-    from server_spark.plans.maintenance import (
-        item_bitmaps,
-        merge_item_bitmaps,
-    )
-
-    klist = list(keys)
-    return _mergeable_fold_stream(
-        spark, input_dir, state_dir, checkpoint_dir, "bitmaps",
-        lambda b: item_bitmaps(b, klist, value_col),
-        lambda base, d: merge_item_bitmaps(base, d, klist),
-    )
-
-
-def price_hist_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    keys: tuple[str, ...] = ("region", "realm_slug", "item"),
-):
-    """Streaming twin of ``maintenance.refresh_price_hist_gold``: the
-    log-bucket buyout-per-unit histograms folded per micro-batch
-    (counts ADD — associative, replay-safe), off which percentile
-    reads carry the same ≤ e^w − 1 relative-error bound as the batch
-    gold. Incremental bucket counts == one-shot bucketing at every
-    batch boundary (tested)."""
-    from server_spark.plans.maintenance import (
-        merge_price_histograms,
-        price_histograms,
-    )
-
-    klist = list(keys)
-
-    def delta(b: DataFrame) -> DataFrame:
-        return price_histograms(
-            b.filter(F.col("buyout") > 0),  # A2's zero-buyout exclusion
-            klist,
-            F.col("buyout") / F.col("quantity"),
-        )
-
-    return _mergeable_fold_stream(
-        spark, input_dir, state_dir, checkpoint_dir, "hist",
-        delta,
-        lambda base, d: merge_price_histograms(base, d, klist),
-    )
-
-
-def read_price_median_state(spark: SparkSession, state_dir: str):
-    """Median buyout-per-unit estimates off the streaming histogram."""
-    import os
-
-    from server_spark.plans.maintenance import estimate_percentile
-
-    return estimate_percentile(
-        spark.read.parquet(os.path.join(state_dir, "hist")),
-        ["region", "realm_slug", "item"],
-        0.5,
-    )
-
-
-def read_bitmap_distinct_state(spark: SparkSession, state_dir: str):
-    """Current per-key EXACT distinct counts off the streaming state."""
-    import os
-
-    from server_spark.plans.maintenance import count_distinct_exact
-
-    return count_distinct_exact(
-        spark.read.parquet(os.path.join(state_dir, "bitmaps")),
-        ["region", "realm_slug"],
-    )
-
-
-def cusum_changepoint_stream(
-    stream: DataFrame,
-    k_sigma: float = 0.5,
-    h_sigma: float = 4.0,
-    warmup: int = 8,
-):
-    """Streaming CUSUM changepoint monitor per (region, realm, item) —
-    the ONLINE counterpart of batch t27 (AMOC finds the best historical
-    split; CUSUM flags drift AS IT ARRIVES with O(1) state, the form a
-    monitoring pipeline deploys). Two-sided tabular CUSUM over
-    per-snapshot mean prices: s⁺ = max(0, s⁺ + z − k), s⁻ =
-    max(0, s⁻ − z − k) with z the standardized deviation from the
-    calibrated baseline; an alert row emits when either side crosses
-    h, then the detector REBASELINES to the alert level (restart-at-
-    new-level form) and re-arms — one alert per sustained shift, not
-    one per post-shift snapshot; the dispersion estimate is kept from
-    calibration (a single outlier spike therefore yields an up alert
-    and, on reversion, a down alert — the honest behavior for a
-    monitor). The first ``warmup`` snapshots calibrate baseline
-    mean/std via Welford updates (exact, O(1) state). State per key: 7
-    doubles —
-    bounded regardless of stream length (the 100 TB posture; contrast
-    a windowed re-estimation, whose state grows with history).
-
-    CUSUM's recursion is inherently sequential per key — exactly what
-    the state store is for and precisely what a window function
-    cannot express (each s⁺ depends on the previous post-reset
-    value). Rows-only streaming op: covered by injection tests (shift
-    fires, no-shift stays quiet), not a SQL oracle.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "region string, realm_slug string, item long, dump_ts timestamp, "
-        "mean_price double, baseline double, direction string, "
-        "cusum double, n_seen long"
-    )
-    state_schema = (
-        "n long, mean double, m2 double, sp double, sn double, "
-        "armed boolean"
-    )
-
-    base = (
-        stream.filter(F.col("buyout") > 0)
-        .withWatermark("dump_ts", "2 hours")
-        .select(
-            "region", "realm_slug", "item", "dump_ts",
-            (F.col("buyout") / F.col("quantity")).alias("per"),
-        )
-    )
-
-    def update(key, pdfs, state, _k=k_sigma, _h=h_sigma, _w=warmup):
-        import math
-
-        import pandas as pd
-
-        rows = pd.concat(list(pdfs))
-        snaps = (
-            rows.groupby("dump_ts", as_index=False)["per"].mean()
-            .sort_values("dump_ts")
-        )
-        if state.exists:
-            n, mean, m2, sp, sn, armed = state.get
-        else:
-            n, mean, m2, sp, sn, armed = 0, 0.0, 0.0, 0.0, 0.0, False
-        out = []
-        for r in snaps.itertuples():
-            x = float(r.per)
-            if n < _w:
-                # Welford calibration phase
-                n += 1
-                d = x - mean
-                mean += d / n
-                m2 += d * (x - mean)
-                if n == _w:
-                    armed = True
-                continue
-            # dispersion is FROZEN at calibration: m2 stops updating
-            # after warmup, so it must be divided by the calibration
-            # count, not the ever-growing n (which decayed sd toward 0
-            # and made the monitor trigger-happy on long streams —
-            # r11 review finding)
-            sd = math.sqrt(m2 / (_w - 1)) if _w > 1 else 0.0
-            if sd <= 0:
-                sd = abs(mean) * 0.01 + 1e-9  # degenerate-flat fallback
-            z = (x - mean) / sd
-            sp = max(0.0, sp + z - _k)
-            sn = max(0.0, sn - z - _k)
-            n += 1
-            if armed and (sp > _h or sn > _h):
-                direction = "up" if sp > _h else "down"
-                out.append(
-                    (
-                        key[0], key[1], key[2], r.dump_ts, x,
-                        float(mean), direction,
-                        float(sp if sp > _h else sn), int(n),
-                    )
-                )
-                mean = x      # rebaseline at the new level
-                sp = sn = 0.0  # re-arm for the next shift
-        state.update(
-            (int(n), float(mean), float(m2), float(sp), float(sn),
-             bool(armed))
-        )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "region", "realm_slug", "item", "dump_ts", "mean_price",
-                "baseline", "direction", "cusum", "n_seen",
-            ],
-        )
-
-    return base.groupBy("region", "realm_slug", "item").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def price_moments_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    keys: tuple[str, ...] = ("region", "realm_slug"),
-):
-    """Streaming twin of ``maintenance.refresh_price_moments_gold``:
-    per-key (n, Σx, Σx²) sufficient statistics folded per micro-batch.
-    The decimal sums are exact and associative+commutative, so replay
-    order cannot change the state and incremental == one-shot holds
-    EXACTLY at every batch boundary (tested) — the strongest member
-    of the mergeable family on that axis (bitmap OR ties it; the
-    histogram only buckets exactly)."""
-    from server_spark.plans.maintenance import (
-        merge_price_moments,
-        price_moments,
-    )
-
-    klist = list(keys)
-
-    def delta(b: DataFrame) -> DataFrame:
-        return price_moments(
-            b.filter(F.col("buyout") > 0),  # A2's zero-buyout exclusion
-            klist,
-            F.col("buyout") / F.col("quantity"),
-        )
-
-    return _mergeable_fold_stream(
-        spark, input_dir, state_dir, checkpoint_dir, "moments",
-        delta,
-        lambda base, d: merge_price_moments(base, d, klist),
-    )
-
-
-def read_price_moments_state(spark: SparkSession, state_dir: str):
-    """mean/std/cv per key off the streaming sufficient statistics."""
-    import os
-
-    from server_spark.plans.maintenance import read_moment_stats
-
-    return read_moment_stats(
-        spark.read.parquet(os.path.join(state_dir, "moments"))
-    )
-
-
-def cdc_profile_stream(
-    spark: SparkSession,
-    input_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-):
-    """Streaming twin of x117_cdc_chunks: documents land as JSON files
-    (the x38/incremental_dedup intake), each micro-batch's CDC chunk
-    relation folds into a standing (chunk_hash, source) state whose
-    counts ADD — associative + commutative, so replay order can't
-    change the state (the mergeable-gold contract; epoch-gated
-    foreachBatch like the bitmap/histogram golds). State grows with
-    chunk TYPES × sources (Heaps-bounded), never with stream history.
-    ``read_cdc_profile_state`` reproduces x117's per-source profile
-    off the folded state — incremental == one-shot at every batch
-    boundary (tested)."""
-    from server_spark.dedup.cdc import cdc_state_delta, merge_cdc_state
-
-    sink = _epoch_gated_fold_sink(
-        state_dir, "cdc", cdc_state_delta, merge_cdc_state
-    )
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_cdc_profile_state(spark: SparkSession, state_dir: str):
-    """x117's per-source CDC profile off the streamed state."""
-    import os
-
-    from server_spark.dedup.cdc import cdc_profile_from_state
-
-    return cdc_profile_from_state(
-        spark.read.parquet(os.path.join(state_dir, "cdc"))
-    )
-
-
-def decontaminate_stream(
-    spark: SparkSession,
-    input_dir: str,
-    train_docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    flag_share: float = 0.2,
-):
-    """Streaming twin of x121: EVAL documents land as JSON files and
-    are decontamination-screened AS THEY ARRIVE against the standing
-    train corpus's CDC chunk set (shift-invariant — a quoted training
-    passage with a new preamble still hits, the x117 re-sync
-    property). The train chunk set is reduced ONCE (Heaps-bounded; at
-    scale a maintained bronze-side table) and joined into every
-    micro-batch — stream-static join, no state store; per-doc verdict
-    rows append to the sink. The arriving docs are chunked
-    EXECUTOR-SIDE inside the micro-batch plan (foreachBatch), so the
-    screen scales as a map over arrival partitions."""
-    from server_spark.barrier import barrier
-    from server_spark.dedup.cdc import cdc_chunk_table
-
-    # BARRIERED: every micro-batch's join re-references this relation;
-    # without materialization the whole train-corpus chunking pipeline
-    # (explode + two window passes + distinct) re-runs once per batch
-    train_set = barrier(
-        cdc_chunk_table(
-            train_docs.select(
-                "doc_id", F.lit("train").alias("source"), "text"
-            )
-        )
-        .select("chunk_hash")
-        .distinct()
-        .withColumn("_in_train", F.lit(1))
-    )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        chunks = cdc_chunk_table(batch_df)
-        hits = (
-            chunks.join(train_set, "chunk_hash", "left")
-            .groupBy("doc_id", "source")
-            .agg(
-                F.count("*").alias("n_chunks"),
-                F.sum(
-                    F.when(F.col("_in_train").isNotNull(), 1).otherwise(0)
-                ).cast("bigint").alias("n_hit"),
-            )
-        )
-        share = F.col("n_hit").cast("double") / F.col("n_chunks")
-        out = hits.select(
-            "doc_id",
-            "source",
-            "n_chunks",
-            "n_hit",
-            share.alias("hit_share"),
-            (share > flag_share).alias("flagged"),
-        )
-        # IDEMPOTENT append: foreachBatch is at-least-once within a
-        # batch (see _epoch_gated_fold_sink) — a crash between this
-        # write and the checkpoint commit replays the batch. Keying
-        # the write on batch_id (partition-style subdir, overwrite
-        # mode) makes a replay overwrite its own prior output instead
-        # of duplicating verdict rows; readers of out_dir see
-        # batch_id as a provenance partition column.
-        import os
-
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(_batch_id)}")
-        )
-
-    stream = (
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def markup_extract_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Streaming twin of x124: raw HTML pages land as JSON files
-    (doc_id, html) and are markup-extracted AS THEY ARRIVE — the
-    ingest-time placement a real pretraining pipeline uses (extract
-    once at fetch, store clean text + boilerplate stats in bronze,
-    never re-parse markup downstream).
-
-    The extraction is a STATELESS narrow map (functions/markup.py,
-    builtins-only), so this is the simplest — and strongest — sink in
-    the module: a direct streaming parquet sink, whose file-sink
-    manifest log gives EXACTLY-ONCE output (no foreachBatch
-    at-least-once caveat, no state store, no watermark). At scale it
-    runs as a map over arrival partitions; the batch and stream paths
-    share one implementation, so stream output == batch output by
-    construction (pinned by test)."""
-    from server_spark.functions.markup import extract_clean_text
-
-    stream = (
-        spark.readStream.schema("doc_id LONG, html STRING")
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-    )
-    return (
-        extract_clean_text(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -25,10 +25,6 @@ from pyspark.sql import functions as F
 
 from server_spark.schemas import EVENTS_RAW, TABLE_SCHEMAS
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-TABLE_NAMES = tuple(TABLE_SCHEMAS)
-
 # path -> "timestamp" | "int64_ns", resolved from the parquet footer.
 _EVENTS_TS_KIND: dict[str, str] = {}
 
@@ -209,14 +205,3 @@ def load_events_range(
     if hi is not None:
         raw = raw.filter(F.col("ts") < F.lit(_ns(hi)))
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (mirrors the DuckDB oracle's
-    pre-registered views) so SQL-form queries can run verbatim."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -168,75 +168,3 @@ def test_realm_status_nested_parse(spark, tmp_path):
         ("lonely", None),
     }
     assert all(r["region"] == "us" for r in rows)
-
-
-def test_csv_and_orc_roundtrip(spark, tmp_path):
-    """CSV (headered, gzip, ISO timestamps) and ORC roundtrips
-    preserve every auction column including the timestamp; a malformed
-    CSV row lands in _corrupt_record instead of failing the read."""
-    import datetime as dt
-
-    from server_spark.schemas import AUCTION
-    from server_spark.sources import formats
-
-    ts = dt.datetime(2024, 3, 1, 12, 30, 5)
-    rows = [
-        (1, 100, "own", "r1", 50, 900, 2, "LONG", "eu", "r1", ts),
-        (2, 200, "own2", "r1", 0, 1500, 1, "SHORT", "eu", "r1", ts),
-    ]
-    df = spark.createDataFrame(rows, AUCTION)
-
-    csv_dir = str(tmp_path / "csv")
-    formats.write_csv(df, csv_dir)
-    back = formats.read_csv(spark, csv_dir)
-    got = sorted(
-        (r["auc"], r["item"], r["bid"], r["dump_ts"]) for r in back.collect()
-    )
-    assert got == [(1, 100, 50, ts), (2, 200, 0, ts)]
-    assert all(r[formats.CORRUPT_COL] is None for r in back.collect())
-
-    # malformed row: wrong arity / unparseable types → quarantined
-    bad = tmp_path / "csv_bad"
-    bad.mkdir()
-    (bad / "part.csv").write_text(
-        "auc,item,owner,owner_realm,bid,buyout,quantity,time_left,"
-        "region,realm_slug,dump_ts\n"
-        "notanint,xyz\n"
-    )
-    q = formats.read_csv(spark, str(bad))
-    qrows = q.collect()
-    assert len(qrows) == 1 and qrows[0][formats.CORRUPT_COL] is not None
-
-    orc_dir = str(tmp_path / "orc")
-    formats.write_orc(df, orc_dir)
-    back_orc = formats.read_orc(spark, orc_dir)
-    assert sorted(map(tuple, back_orc.collect())) == sorted(map(tuple, rows))
-
-
-def test_jsonl_roundtrip_gzip(spark, tmp_path):
-    """Gzip JSONL roundtrips the auction schema; a malformed line is
-    quarantined not fatal."""
-    import datetime as dt
-    import glob
-
-    from server_spark.schemas import AUCTION
-    from server_spark.sources import formats
-
-    ts = dt.datetime(2024, 3, 2, 8, 15, 0)
-    df = spark.createDataFrame(
-        [(7, 300, "own", "r2", 10, 2500, 3, "MEDIUM", "us", "r2", ts)], AUCTION
-    )
-    out = str(tmp_path / "jsonl")
-    formats.write_jsonl(df, out)
-    assert glob.glob(out + "/*.json.gz")  # actually compressed files
-    back = formats.read_jsonl(spark, out)
-    rows = back.collect()
-    assert len(rows) == 1
-    assert rows[0]["auc"] == 7 and rows[0]["dump_ts"] == ts
-    assert rows[0][formats.CORRUPT_COL] is None
-
-    bad = tmp_path / "jsonl_bad"
-    bad.mkdir()
-    (bad / "part.json").write_text('{"auc": "notanint", "item": }\n')
-    q = formats.read_jsonl(spark, str(bad)).collect()
-    assert len(q) == 1 and q[0][formats.CORRUPT_COL] is not None

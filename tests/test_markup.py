@@ -125,43 +125,6 @@ def test_plan_is_pure_builtin_narrow_map(spark):
     assert "Exchange" not in plan
 
 
-def test_markup_extract_stream_equals_batch(spark, tmp_path):
-    """The streaming twin shares the batch implementation (one
-    narrow map), so stream output must equal the batch extraction of
-    the same pages — across two micro-batches and a checkpoint
-    resume, with the file-sink manifest giving exactly-once rows."""
-    import json
-    import os
-
-    from server_spark.streaming import pipeline as sp
-
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(input_dir)
-
-    pages = [(1, PAGE), (2, "<p>five words here right now</p>")]
-    later = [(3, '<nav><a href="/">Only nav</a></nav>')]
-
-    def write(name, rows):
-        with open(os.path.join(input_dir, f"{name}.json"), "w") as fh:
-            for doc_id, html in rows:
-                fh.write(json.dumps({"doc_id": doc_id, "html": html}) + "\n")
-
-    write("b0", pages)
-    sp.markup_extract_stream(spark, input_dir, out_dir, ckpt).awaitTermination()
-    write("b1", later)
-    sp.markup_extract_stream(spark, input_dir, out_dir, ckpt).awaitTermination()
-
-    batch = extract_clean_text(
-        spark.createDataFrame(pages + later, "doc_id long, html string")
-    )
-    got = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
-    want = sorted(tuple(r) for r in batch.collect())
-    assert got == want
-    assert len(got) == 3
-
-
 @pytest.mark.parametrize(
     "min_words,links_per_word", [(3, 3), (5, 5), (8, 10), (1, 2)]
 )

@@ -35,8 +35,11 @@ def _dumps(spark):
 
 @pytest.fixture(scope="module")
 def pipeline(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("medallion"))
-    paths = med.run_all(spark, _dumps(spark), root)
+    paths = med.MedallionPaths(str(tmp_path_factory.mktemp("medallion")))
+    med.ingest_bronze(spark, _dumps(spark), paths)
+    med.build_silver(spark, paths)
+    med.build_gold_prices(spark, paths)
+    med.build_gold_churn(spark, paths)
     return paths
 
 

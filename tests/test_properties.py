@@ -608,18 +608,17 @@ def test_rolling_median_and_ewma_invariants(spark, vals):
 
 
 # ---------------------------------------------------------------------------
-# Misra-Gries merge-truncate lemma (x73 / hot_items_stream math)
+# Misra-Gries merge-truncate lemma (x73 math)
 # ---------------------------------------------------------------------------
 #
-# Both MG implementations (x73's pandas-Series batch fold, the
-# streaming dict fold) are closures pickled by value, so this pins the
-# LEMMA they rely on — per-partition summaries folded by batch
-# value-counts + "subtract the (cap+1)-th largest, drop <=0", then
-# merged by plain addition, (a) never overcount, (b) undercount by at
-# most N/(cap+1), hence (c) candidate sets thresholded with that
-# margin are supersets of the true heavy hitters. The closures
-# themselves are exercised end-to-end by the x73 oracle parity and
-# test_streaming_hot_items.
+# x73's MG implementation (a pandas-Series batch fold) is a closure
+# pickled by value, so this pins the LEMMA it relies on — per-partition
+# summaries folded by batch value-counts + "subtract the (cap+1)-th
+# largest, drop <=0", then merged by plain addition, (a) never
+# overcount, (b) undercount by at most N/(cap+1), hence (c) candidate
+# sets thresholded with that margin are supersets of the true heavy
+# hitters. The closure itself is exercised end-to-end by the x73
+# oracle parity.
 
 from collections import Counter
 

@@ -7,6 +7,10 @@ driver run verified exactly ``DRIVER_WINDOW`` (CORRECTNESS_r02.json,
 refactors and mid-round driver runs.
 """
 
+import ast
+import importlib
+from pathlib import Path
+
 from server_spark import registry
 
 
@@ -60,3 +64,36 @@ def test_queries_and_oracles_align():
     # dict order of oracle_sql follows queries order
     qnames = [n for n in qs if n in os]
     assert list(os) == qnames
+
+
+def test_in_package_imports_resolve():
+    """Every ``from server_spark... import name`` and ``import
+    server_spark...`` in the package resolves, function-local ones
+    included: a dangling local import otherwise raises only when the
+    query that holds it runs."""
+    pkg = Path(registry.__file__).resolve().parent
+    missing = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                targets = [(a.name, None) for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                targets = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in targets:
+                if module.split(".")[0] != "server_spark":
+                    continue
+                where = f"{path.relative_to(pkg.parent)}:{node.lineno}"
+                try:
+                    mod = importlib.import_module(module)
+                except ImportError as e:
+                    missing.append(f"{where}: {module} ({e})")
+                    continue
+                if name is None or hasattr(mod, name):
+                    continue
+                try:
+                    importlib.import_module(f"{module}.{name}")
+                except ImportError:
+                    missing.append(f"{where}: {module}.{name}")
+    assert not missing, "unresolved in-package imports:\n" + "\n".join(missing)

@@ -2,19 +2,16 @@
 
 The batch metamorphic suite (test_config_metamorphic.py) asserts query
 results are invariant under config changes; this file extends the same
-contract to stateful streaming: for two pipelines — the windowed
-aggregation (hourly_price_stream) and the custom stateful operator
-(price_delta_stateful, applyInPandasWithState) — the drained output
-must be IDENTICAL under
+contract to stateful streaming: for the windowed aggregation
+(hourly_price_stream) the drained output must be IDENTICAL under
 
   * state store backend: default HDFS-heap provider vs RocksDB, and
   * micro-batch split: all input in ONE micro-batch vs one file per
     micro-batch (maxFilesPerTrigger=1),
 
-because windowed aggs are algebraic merges and the delta operator
-sorts snapshots inside the update and carries state across batches —
-neither may depend on where the engine happens to cut batches or
-where it keeps its state rows.
+because windowed aggs are algebraic merges — the result may not
+depend on where the engine happens to cut batches or where it keeps
+its state rows.
 """
 
 from __future__ import annotations
@@ -39,7 +36,7 @@ T2 = dt.datetime(2024, 1, 1, 12, 20)
 T3 = dt.datetime(2024, 1, 1, 18, 0)  # watermark pusher
 
 # (auc, item, buyout, qty) per snapshot — two items with shifting
-# prices so the delta operator has real prev/next structure
+# prices across hourly windows
 SNAPSHOTS = [
     (T0, [(1, 100, 500, 1), (2, 100, 900, 3), (3, 200, 700, 2)]),
     (T1, [(4, 100, 600, 1), (5, 200, 900, 2)]),
@@ -104,13 +101,7 @@ def _hourly(spark, input_dir):
     )
 
 
-def _delta(spark, input_dir):
-    return sp.price_delta_stateful(
-        sp.read_auction_stream(spark, input_dir, max_files=1)
-    )
-
-
-PIPELINES = {"hourly_window": _hourly, "price_delta_stateful": _delta}
+PIPELINES = {"hourly_window": _hourly}
 COMBOS = [
     ("default", "many"),
     ("rocksdb", "one"),
@@ -146,131 +137,9 @@ def test_rocksdb_combo_engaged(spark, tmp_path):
     provider (guard against the conf silently not applying): the
     checkpoint state dir contains RocksDB artifacts."""
     base = str(tmp_path / "probe")
-    _drain(spark, _delta, base, "rocksdb", "many")
+    _drain(spark, _hourly, base, "rocksdb", "many")
     state_root = os.path.join(base, "ckpt", "state")
     artifacts = []
     for root, _dirs, files in os.walk(state_root):
         artifacts += [f for f in files if f.endswith((".zip", ".changelog"))]
     assert artifacts, "no RocksDB snapshot/changelog artifacts found"
-
-
-# ---------------------------------------------------------------------------
-# CDC chunk-profile streaming fold: incremental == one-shot
-# ---------------------------------------------------------------------------
-
-# long enough that CDC boundaries fire (E[chunk] = 16 tokens), so the
-# shifted mirror in batch 1 re-synchronizes onto shared chunk hashes
-_BODY = (
-    "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-    "lambda mu nu xi omicron pi rho sigma tau upsilon phi chi "
-    "psi omega one two three four five six seven eight nine ten "
-    "eleven twelve thirteen fourteen fifteen sixteen seventeen "
-    "eighteen nineteen twenty alpha2 beta2 gamma2 delta2 "
-    "epsilon2 zeta2 eta2 theta2 iota2 kappa2 lambda2 mu2 nu2 "
-    "xi2 omicron2 pi2 rho2 sigma2 tau2 upsilon2"
-)
-DOCS_B0 = [
-    (1, _BODY, "web"),
-    (2, _BODY, "wiki"),
-]
-DOCS_B1 = [
-    (3, "completely different words about spark dataframes shuffles "
-        "exchanges partitions codegen catalyst tungsten arrow", "web"),
-    (4, "breaking news prefix inserted here " + _BODY, "news"),
-]
-
-
-def _write_doc_json(spark, input_dir, name, rows):
-    import json
-
-    os.makedirs(input_dir, exist_ok=True)
-    with open(os.path.join(input_dir, f"{name}.json"), "w") as fh:
-        for doc_id, text, source in rows:
-            fh.write(json.dumps(
-                {"doc_id": doc_id, "text": text, "source": source}
-            ) + "\n")
-
-
-def test_cdc_profile_stream_incremental_equals_oneshot(spark, tmp_path):
-    """The epoch-gated CDC fold over micro-batches equals the batch
-    x117 profile over all documents seen so far, at every boundary
-    and across a checkpoint resume."""
-    input_dir = str(tmp_path / "in")
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def oneshot(all_rows):
-        import pandas as pd
-
-        docs = pd.DataFrame(
-            all_rows, columns=["doc_id", "text", "source"]
-        )
-        docs["lang"] = "en"
-        docs["n_chars"] = docs["text"].str.len()
-        td = str(tmp_path / f"oneshot_{len(all_rows)}")
-        os.makedirs(td, exist_ok=True)
-        docs.to_parquet(os.path.join(td, "documents.parquet"),
-                        index=False)
-        from server_spark.registry import queries
-
-        return sorted(
-            tuple(r)
-            for r in queries()["x117_cdc_chunks"](spark, td).collect()
-        )
-
-    _write_doc_json(spark, input_dir, "b0", DOCS_B0)
-    q = sp.cdc_profile_stream(spark, input_dir, state_dir, ckpt)
-    q.awaitTermination()
-    got = sorted(
-        tuple(r)
-        for r in sp.read_cdc_profile_state(spark, state_dir).collect()
-    )
-    assert got == oneshot(DOCS_B0)
-
-    # resume from checkpoint: only the new file folds
-    _write_doc_json(spark, input_dir, "b1", DOCS_B1)
-    q2 = sp.cdc_profile_stream(spark, input_dir, state_dir, ckpt)
-    q2.awaitTermination()
-    got2 = sorted(
-        tuple(r)
-        for r in sp.read_cdc_profile_state(spark, state_dir).collect()
-    )
-    assert got2 == oneshot(DOCS_B0 + DOCS_B1)
-    # the shifted mirror in batch 1 (doc 4) re-synchronized onto doc
-    # 1/2's chunks: 'news' shares content cross-source
-    by_source = {r[0]: r for r in got2}
-    assert by_source["news"][5] > 0  # cross_source_share
-
-
-def test_decontaminate_stream_flags_shifted_mirror(spark, tmp_path):
-    """Streaming decontamination: an arriving eval doc that quotes a
-    train doc behind a fresh preamble is flagged (shift-invariant),
-    a clean doc passes with zero hits, and verdicts accumulate across
-    micro-batches / checkpoint resume."""
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    train = spark.createDataFrame(
-        [(100, _BODY)], "doc_id long, text string"
-    )
-    _write_doc_json(
-        spark, input_dir, "b0",
-        [(1, "inserted preamble shifts everything " + _BODY, "eval")],
-    )
-    q = sp.decontaminate_stream(spark, input_dir, train, out_dir, ckpt)
-    q.awaitTermination()
-    _write_doc_json(
-        spark, input_dir, "b1",
-        [(2, "totally unrelated clean content with fresh words only",
-          "eval")],
-    )
-    q2 = sp.decontaminate_stream(spark, input_dir, train, out_dir, ckpt)
-    q2.awaitTermination()
-
-    rows = {
-        r["doc_id"]: r for r in spark.read.parquet(out_dir).collect()
-    }
-    assert set(rows) == {1, 2}
-    assert rows[1]["flagged"] and rows[1]["hit_share"] > 0.5
-    assert not rows[2]["flagged"] and rows[2]["n_hit"] == 0

@@ -1,7 +1,7 @@
 """Z-order clustering (plans/layout.py): morton-code correctness and
 the file-skipping property the layout exists for. The quantitative
-measurement lives in scripts/probe_zorder.py (sf0.1, JSON); these
-assertions pin the qualitative shape at smoke scale."""
+measurement (sf0.1, JSON) was scripts/probe_zorder.py, kept at commit
+8de34ac; these assertions pin the qualitative shape at smoke scale."""
 
 from __future__ import annotations
 
