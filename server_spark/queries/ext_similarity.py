@@ -928,38 +928,21 @@ _X59_SQL = f"""
     late=True,
 )
 def x59_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from server_spark.similarity.cosine import dot, norm
-
     emb = _emb(spark, sf_dir)
     corpus = emb.select(
-        "vec_id", "embedding", "label", norm("embedding").alias("_cn")
+        "vec_id", "embedding", "label", cos.norm("embedding").alias("_nrm")
     )
     qs = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
         F.col("label").alias("q_label"),
-        norm("embedding").alias("_qn"),
+        cos.norm("embedding").alias("_qn"),
     )
-    scored = (
-        corpus.crossJoin(F.broadcast(qs))
-        .filter(
-            (F.col("query_id") != F.col("vec_id"))
-            & (F.col("q_label") != F.col("label"))
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            r4(
-                dot("embedding", "query_vec") / (F.col("_cn") * F.col("_qn"))
-            ).alias("score"),
-        )
+    cand = corpus.crossJoin(F.broadcast(qs)).filter(
+        F.col("q_label") != F.col("label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
+    return cos._exact_topk(
+        cand, TOPK, "vec_id", "embedding", "query_id", "query_vec"
     )
 
 
@@ -1094,10 +1077,7 @@ def x65_mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     emb = _emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
+    queries = _query_vecs(emb)
     cands = cos.brute_force_topk(emb, queries, k=MMR_M).select(
         "query_id", "vec_id"
     )
@@ -1922,36 +1902,22 @@ def x104_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dim",
         F.expr("slice(embedding, 1, dim)").alias("tvec"),
     )
-    corpus = corpus.withColumn("_cn", cos.norm("tvec"))
+    corpus = corpus.withColumn("_nrm", cos.norm("tvec"))
     qs = (
         corpus.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
             F.col("vec_id").alias("qid"),
             F.col("dim"),
             F.col("tvec").alias("qvec"),
-            F.col("_cn").alias("_qn"),
+            F.col("_nrm").alias("_qn"),
         )
     )
-    scored = (
-        corpus.join(F.broadcast(qs), "dim")
-        .filter(F.col("qid") != F.col("vec_id"))
-        .select(
-            "qid",
-            F.col("vec_id").alias("vid"),
-            "dim",
-            r4(
-                cos.dot("tvec", "qvec") / (F.col("_cn") * F.col("_qn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("qid", "dim").orderBy(
-        F.col("score").desc(), F.col("vid").asc()
-    )
+    cand = corpus.join(F.broadcast(qs), "dim").withColumnRenamed("vec_id", "vid")
     topk = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOPK)
+        cos._exact_topk(cand, TOPK, "vid", "tvec", "qid", "qvec", by=["qid", "dim"])
         .select("qid", "vid", "dim")
-    ).transform(lazy_barrier)  # feeds the baseline and the recall join
+        .transform(lazy_barrier)  # feeds the baseline and the recall join
+    )
     base = topk.filter(F.col("dim") == _X104_DIMS[-1]).select(
         "qid", F.col("vid").alias("bvid")
     )

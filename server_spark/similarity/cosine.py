@@ -15,6 +15,8 @@ so result sets are deterministic and engine-comparable (parity.r4).
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -94,6 +96,40 @@ def dot_fixed(a: str | Column, b: str | Column, dim: int) -> Column:
     return s
 
 
+def _rank_topk(
+    scored: DataFrame, k: int, by: list[str], id_col: str, score_col: str = "score"
+) -> DataFrame:
+    """The final cut of every top-k method: ``rnk`` = row_number over
+    ``by`` ordered by (score desc, id asc), kept while ``rnk <= k``
+    (planned as a WindowGroupLimit ahead of the window)."""
+    w = Window.partitionBy(*by).orderBy(
+        F.col(score_col).desc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= k
+    )
+
+
+def _exact_topk(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, qid_col: str,
+    qvec_col: str, dim: int | None = None, by: list[str] | None = None,
+) -> DataFrame:
+    """The exact verify stage every candidate generator ends in.
+
+    ``cand`` carries one row per (query, candidate) with both vectors
+    and both norms (``_nrm`` corpus side, ``_qn`` query side); self
+    pairs are dropped, each row is scored r4(dot / (nrm · qn)) — the
+    unrolled ``dot_fixed`` when ``dim`` is given, else the ``dot``
+    fold — and ranked per ``by`` (default the query id). Emits
+    (*by, id, score, rnk)."""
+    by = by or [qid_col]
+    d = dot_fixed(vec_col, qvec_col, dim) if dim else dot(vec_col, qvec_col)
+    scored = cand.filter(F.col(qid_col) != F.col(id_col)).select(
+        *by, id_col, r4(d / (F.col("_nrm") * F.col("_qn"))).alias("score")
+    )
+    return _rank_topk(scored, k, by, id_col)
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -110,26 +146,13 @@ def brute_force_topk(
     (rounded score desc, vec_id) for determinism.
     """
     corpus = embeddings.select(
-        F.col(id_col), F.col(vec_col), norm(vec_col).alias("_cn")
+        F.col(id_col), F.col(vec_col), norm(vec_col).alias("_nrm")
     )
     qs = queries.select(
         F.col(qid_col), F.col(qvec_col), norm(qvec_col).alias("_qn")
     )
-    scored = corpus.crossJoin(F.broadcast(qs)).select(
-        F.col(qid_col),
-        F.col(id_col),
-        r4(
-            dot(vec_col, qvec_col) / (F.col("_cn") * F.col("_qn"))
-        ).alias("score"),
-    )
-    scored = scored.filter(F.col(qid_col) != F.col(id_col))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "score", "rnk")
+    return _exact_topk(
+        corpus.crossJoin(F.broadcast(qs)), k, id_col, vec_col, qid_col, qvec_col
     )
 
 
@@ -169,6 +192,40 @@ def neardup_pairs(
         )
         .filter(F.col("score") >= threshold)
     )
+
+
+def _cell_pairs(rows_a, rows_b, diagonal: bool, threshold: float):
+    """Score one (block, block) cell of the all-pairs grid as one numpy
+    matmul: (a, b, score) arrays of the pairs at or above ``threshold``,
+    normalised to a < b. Executors get it as source text
+    (``_CELL_SRC``) so workers never import server_spark."""
+    import numpy as np
+
+    ids_a = np.array([r["id"] for r in rows_a], dtype=np.int64)
+    mat_a = np.array([r["vec"] for r in rows_a], dtype=np.float64)
+    ids_b = np.array([r["id"] for r in rows_b], dtype=np.int64)
+    mat_b = np.array([r["vec"] for r in rows_b], dtype=np.float64)
+    na = np.linalg.norm(mat_a, axis=1)
+    nb = np.linalg.norm(mat_b, axis=1)
+    s = (mat_a @ mat_b.T) / np.outer(na, nb)
+    # canonical rounding: 1e-10 snap, then decimal HALF_UP to 4 places
+    # — the exact numpy replica of parity.r4. Both steps HALF_UP
+    # (sign*floor(abs*k+0.5)/k): np.round is half-to-even on the binary
+    # double and can disagree with the DECIMAL(38,10) cast at a
+    # midpoint, flipping threshold inclusion vs the oracle.
+    s = np.sign(s) * np.floor(np.abs(s) * 1e10 + 0.5) / 1e10
+    s = np.sign(s) * np.floor(np.abs(s) * 1e4 + 0.5) / 1e4
+    keep = s >= threshold
+    if diagonal:
+        # diagonal cell: each unordered pair appears twice; an
+        # off-diagonal cell holds every (a, b) pair exactly once
+        keep &= ids_a[:, None] < ids_b[None, :]
+    ia, ib = np.nonzero(keep)
+    pa, pb = ids_a[ia], ids_b[ib]
+    return np.minimum(pa, pb), np.maximum(pa, pb), s[ia, ib]
+
+
+_CELL_SRC = inspect.getsource(_cell_pairs)
 
 
 def derive_n_blocks(
@@ -239,43 +296,20 @@ def neardup_pairs_blocked(
     b = packed.select(F.col("blk").alias("blk_b"), F.col("rows").alias("rows_b"))
     grid = a.join(b, F.col("blk_a") <= F.col("blk_b"))
 
+    cell_src = _CELL_SRC  # by value: the closure must not import server_spark
+
     def score(batches):
+        ns: dict = {}
+        exec(cell_src, ns)
+        cell = ns["_cell_pairs"]
         for pdf in batches:
-            out_a, out_b, out_s = [], [], []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([r["id"] for r in row["rows_a"]], dtype=np.int64)
-                mat_a = np.array([r["vec"] for r in row["rows_a"]], dtype=np.float64)
-                ids_b = np.array([r["id"] for r in row["rows_b"]], dtype=np.int64)
-                mat_b = np.array([r["vec"] for r in row["rows_b"]], dtype=np.float64)
-                na = np.linalg.norm(mat_a, axis=1)
-                nb = np.linalg.norm(mat_b, axis=1)
-                s = (mat_a @ mat_b.T) / np.outer(na, nb)
-                # canonical rounding: 1e-10 snap, then decimal HALF_UP
-                # to 4 places — the exact numpy replica of parity.r4.
-                # Both steps HALF_UP: np.round is half-to-even and can
-                # disagree with the DECIMAL(38,10) cast at a midpoint.
-                s = np.sign(s) * np.floor(np.abs(s) * 1e10 + 0.5) / 1e10
-                s = np.sign(s) * np.floor(np.abs(s) * 1e4 + 0.5) / 1e4
-                if row["blk_a"] == row["blk_b"]:
-                    # diagonal cell: each unordered pair appears twice
-                    mask = ids_a[:, None] < ids_b[None, :]
-                else:
-                    # off-diagonal cell: every (a, b) is a distinct
-                    # unordered pair; normalize to (min, max)
-                    mask = np.ones((len(ids_a), len(ids_b)), dtype=bool)
-                ia, ib = np.nonzero((s >= threshold) & mask)
-                pa, pb = ids_a[ia], ids_b[ib]
-                out_a.append(np.minimum(pa, pb))
-                out_b.append(np.maximum(pa, pb))
-                out_s.append(s[ia, ib])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "vec_a": np.concatenate(out_a),
-                        "vec_b": np.concatenate(out_b),
-                        "score": np.concatenate(out_s),
-                    }
-                )
+            cells = [
+                cell(r["rows_a"], r["rows_b"], r["blk_a"] == r["blk_b"], threshold)
+                for _, r in pdf.iterrows()
+            ]
+            if cells:
+                a, b, s = (np.concatenate(c) for c in zip(*cells))
+                yield pd.DataFrame({"vec_a": a, "vec_b": b, "score": s})
 
     return grid.mapInPandas(score, "vec_a long, vec_b long, score double")
 
@@ -332,43 +366,23 @@ def neardup_pairs_blocked_grouped(
     )
     grid = a.join(b, "grp").filter(F.col("blk_a") <= F.col("blk_b"))
 
+    cell_src = _CELL_SRC  # by value: the closure must not import server_spark
+
     def score(batches):
+        ns: dict = {}
+        exec(cell_src, ns)
+        cell = ns["_cell_pairs"]
         for pdf in batches:
-            out_g, out_a, out_b, out_s = [], [], [], []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([r["id"] for r in row["rows_a"]], dtype=np.int64)
-                mat_a = np.array([r["vec"] for r in row["rows_a"]], dtype=np.float64)
-                ids_b = np.array([r["id"] for r in row["rows_b"]], dtype=np.int64)
-                mat_b = np.array([r["vec"] for r in row["rows_b"]], dtype=np.float64)
-                na = np.linalg.norm(mat_a, axis=1)
-                nb_ = np.linalg.norm(mat_b, axis=1)
-                s = (mat_a @ mat_b.T) / np.outer(na, nb_)
-                # canonical rounding — numpy replica of parity.r4. Both
-                # steps use explicit HALF_UP (sign*floor(abs*k+0.5)/k):
-                # np.round is round-half-to-even on the binary double,
-                # which can disagree with the DECIMAL(38,10) HALF_UP
-                # cast exactly at a midpoint and flip threshold
-                # inclusion vs the oracle.
-                s = np.sign(s) * np.floor(np.abs(s) * 1e10 + 0.5) / 1e10
-                s = np.sign(s) * np.floor(np.abs(s) * 1e4 + 0.5) / 1e4
-                if row["blk_a"] == row["blk_b"]:
-                    mask = ids_a[:, None] < ids_b[None, :]
-                else:
-                    mask = np.ones((len(ids_a), len(ids_b)), dtype=bool)
-                ia, ib = np.nonzero((s >= threshold) & mask)
-                pa, pb = ids_a[ia], ids_b[ib]
-                out_g.append(np.full(len(ia), row["grp"], dtype=np.int64))
-                out_a.append(np.minimum(pa, pb))
-                out_b.append(np.maximum(pa, pb))
-                out_s.append(s[ia, ib])
-            if out_a:
+            grps, cells = [], []
+            for _, r in pdf.iterrows():
+                cells.append(
+                    cell(r["rows_a"], r["rows_b"], r["blk_a"] == r["blk_b"], threshold)
+                )
+                grps.append(np.full(len(cells[-1][0]), r["grp"], dtype=np.int64))
+            if cells:
+                a, b, s = (np.concatenate(c) for c in zip(*cells))
                 yield pd.DataFrame(
-                    {
-                        "cluster_id": np.concatenate(out_g),
-                        "vec_a": np.concatenate(out_a),
-                        "vec_b": np.concatenate(out_b),
-                        "score": np.concatenate(out_s),
-                    }
+                    {"cluster_id": np.concatenate(grps), "vec_a": a, "vec_b": b, "score": s}
                 )
 
     return grid.mapInPandas(
@@ -437,25 +451,10 @@ def lsh_topk(
         qid_col, qvec_col, "_qn",
         F.posexplode("_sig").alias("_tbl", "_bucket"),
     )
-    cand = (
-        e.join(F.broadcast(q), ["_tbl", "_bucket"])
-        .filter(F.col(qid_col) != F.col(id_col))
-        .dropDuplicates([qid_col, id_col])
+    cand = e.join(F.broadcast(q), ["_tbl", "_bucket"]).dropDuplicates(
+        [qid_col, id_col]
     )
-    d = dot_fixed(vec_col, qvec_col, dim) if dim else dot(vec_col, qvec_col)
-    scored = cand.select(
-        F.col(qid_col),
-        F.col(id_col),
-        r4(d / (F.col("_nrm") * F.col("_qn"))).alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "score", "rnk")
-    )
+    return _exact_topk(cand, k, id_col, vec_col, qid_col, qvec_col, dim)
 
 
 def norm_trim_flags(

@@ -25,15 +25,15 @@ Recall/cost dial: n_probe/n_clusters. At 1B vectors each query touches
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from server_spark.parity import r4
-from server_spark.similarity.cosine import dot_fixed
+from server_spark.similarity.cosine import _exact_topk
 
 # Quantizer training never needs more than this many sample vectors
 # (FAISS guidance: ~39×nlist points suffice; 64k is generous for any
@@ -253,26 +253,13 @@ def search(
             [], f"{qid_col} long, {index.id_col} long, score double, rnk int"
         )
     probes = _query_probes(index, queries, n_probe, qvec_col)
-    cand = (
-        index.assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col(qid_col) != F.col(index.id_col))
-        # boundary-replicated vectors can match a query in several
-        # probed lists — score each candidate once
-        .dropDuplicates([qid_col, index.id_col])
+    # boundary-replicated vectors can match a query in several probed
+    # lists — score each candidate once
+    cand = index.assigned.join(F.broadcast(probes), "cluster").dropDuplicates(
+        [qid_col, index.id_col]
     )
-    scored = cand.select(
-        F.col(qid_col),
-        F.col(index.id_col),
-        r4(
-            dot_fixed(index.vec_col, qvec_col, index.dim)
-            / (F.col("_nrm") * F.col("_qn"))
-        ).alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.col("score").desc(), F.col(index.id_col).asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, index.id_col, "score", "rnk")
+    return _exact_topk(
+        cand, k, index.id_col, index.vec_col, qid_col, qvec_col, index.dim
     )
 
 
@@ -295,6 +282,36 @@ def _index_path(key: tuple) -> str:
     return os.path.join(tempfile.gettempdir(), "server_spark_ivf", digest)
 
 
+def _load_or_build(spark, key: tuple, sidecar: str, table: str, build):
+    """(array, DataFrame) of offline-built index state, persisted under
+    ``_index_path(key)`` as a ``.npy`` sidecar plus a parquet table.
+    Reloads (cached) when the sidecar is there; otherwise ``build()``s
+    and writes a ``tmp.<pid>`` copy that is renamed into place, so a
+    concurrent builder that lost the race just drops its copy.
+    Persistence is an optimization: any load or write failure falls
+    back to the in-memory result."""
+    path = _index_path(key)
+    sidecar_file = os.path.join(path, sidecar)
+    try:
+        if os.path.exists(sidecar_file):
+            arr = np.load(sidecar_file)
+            return arr, spark.read.parquet(os.path.join(path, table)).cache()
+    except Exception:
+        pass  # unreadable/partial state → rebuild below
+    arr, df = build()
+    try:
+        tmp = f"{path}.tmp.{os.getpid()}"
+        df.write.mode("overwrite").parquet(os.path.join(tmp, table))
+        np.save(os.path.join(tmp, sidecar), arr)
+        if not os.path.exists(sidecar_file):
+            os.replace(tmp, path)
+        else:  # another process won the race
+            shutil.rmtree(tmp, ignore_errors=True)
+    except Exception:
+        pass
+    return arr, df
+
+
 def cached_index(
     embeddings: DataFrame,
     cache_key: str,
@@ -308,49 +325,22 @@ def cached_index(
     # changed the centroids for a given corpus, so older persisted
     # indexes (keyed without the tag) must not be reloaded.
     key = (cache_key, n_clusters, seed, id_col, vec_col, n_assign, "hsamp2")
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
+    if key not in _INDEX_CACHE:
 
-    spark = embeddings.sparkSession
-    path = _index_path(key)
-    cent_file = os.path.join(path, "centroids.npy")
-    assigned_dir = os.path.join(path, "assigned")
-    try:
-        if os.path.exists(cent_file):
-            centroids = np.load(cent_file)
-            assigned = spark.read.parquet(assigned_dir).cache()
-            index = IvfIndex(
-                centroids,
-                assigned,
-                centroids.shape[1] if len(centroids) else 0,
-                id_col,
-                vec_col,
-                n_assign,
+        def build():
+            index = build_index(
+                embeddings, n_clusters, seed, id_col, vec_col, n_assign=n_assign
             )
-            _INDEX_CACHE[key] = index
-            return index
-    except Exception:
-        pass  # unreadable/partial index → rebuild below
+            return index.centroids, index.assigned
 
-    index = build_index(
-        embeddings, n_clusters, seed, id_col, vec_col, n_assign=n_assign
-    )
-    try:
-        tmp = f"{path}.tmp.{os.getpid()}"
-        index.assigned.write.mode("overwrite").parquet(
-            os.path.join(tmp, "assigned")
+        centroids, assigned = _load_or_build(
+            embeddings.sparkSession, key, "centroids.npy", "assigned", build
         )
-        np.save(os.path.join(tmp, "centroids.npy"), index.centroids)
-        if not os.path.exists(cent_file):
-            os.replace(tmp, path)
-        else:  # another process won the race
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:
-        pass  # persistence is an optimization; the in-memory index works
-    _INDEX_CACHE[key] = index
-    return index
+        dim = centroids.shape[1] if len(centroids) else 0
+        _INDEX_CACHE[key] = IvfIndex(
+            centroids, assigned, dim, id_col, vec_col, n_assign
+        )
+    return _INDEX_CACHE[key]
 
 
 def ivf_topk(

@@ -34,19 +34,74 @@ tests/test_pq.py against the exact brute force.
 
 from __future__ import annotations
 
+import inspect
+
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from server_spark.similarity.cosine import _exact_topk, _rank_topk, norm
 from server_spark.similarity.ivf import (
     MAX_TRAIN_SAMPLE,
     _kmeans_fit,
+    _load_or_build,
+    _query_probes,
     bounded_training_sample,
+    build_index,
+    cached_index,
 )
 
 PQ_M = 8        # subspaces (64-dim → 8-dim subvectors)
 PQ_KSUB = 256   # codebook entries per subspace (uint8 codes)
+
+
+def _fit_codebooks(
+    train: np.ndarray, m: int, ksub: int, seed: int
+) -> np.ndarray:
+    """(m, min(ksub, n), dim/m) codebooks: one seeded k-means per
+    subspace of the (n, dim) training matrix."""
+    dsub = train.shape[1] // m
+    k = min(ksub, len(train))
+    return np.stack(
+        [
+            _kmeans_fit(train[:, j * dsub : (j + 1) * dsub], k, seed + j)
+            for j in range(m)
+        ]
+    )
+
+
+def _pq_codes(mat, codebooks):
+    """(n, m) uint8 codes: per subspace, the nearest codeword of each
+    row of ``mat``. Executors get it as source text
+    (``_PQ_CODES_SRC``) so workers never import server_spark."""
+    import numpy as np
+
+    m, _, dsub = codebooks.shape
+    cb_sq = (codebooks * codebooks).sum(axis=2)  # (m, ksub)
+    codes = np.empty((len(mat), m), dtype=np.uint8)
+    for j in range(m):
+        sub = mat[:, j * dsub : (j + 1) * dsub]
+        d2 = (
+            (sub * sub).sum(axis=1)[:, None]
+            - 2.0 * (sub @ codebooks[j].T)
+            + cb_sq[j][None, :]
+        )
+        codes[:, j] = d2.argmin(axis=1)
+    return codes
+
+
+_PQ_CODES_SRC = inspect.getsource(_pq_codes)
+
+
+def _pq_luts(qmat: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """(nq, m, ksub) ADC lookup tables: the dot product of each query
+    subvector with every codeword of its subspace."""
+    m, _, dsub = codebooks.shape
+    return np.stack(
+        [qmat[:, j * dsub : (j + 1) * dsub] @ codebooks[j].T for j in range(m)],
+        axis=1,
+    )
 
 
 def train_pq(
@@ -70,17 +125,9 @@ def train_pq(
     )
     if train.size == 0:  # empty corpus → empty codebooks; ADC over
         return np.zeros((m, 0, 0))  # an empty code table stays empty
-    n, dim = train.shape
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    k = min(ksub, n)
-    return np.stack(
-        [
-            _kmeans_fit(train[:, j * dsub : (j + 1) * dsub], k, seed + j)
-            for j in range(m)
-        ]
-    )
+    if train.shape[1] % m:
+        raise ValueError(f"dim {train.shape[1]} not divisible by m={m}")
+    return _fit_codebooks(train, m, ksub, seed)
 
 
 def encode_pq(
@@ -92,10 +139,9 @@ def encode_pq(
     """(id, codes binary[m], _rnrm double) — one Arrow-batched narrow
     pass; ``_rnrm`` is the exact reconstruction norm (subspaces are an
     orthogonal decomposition, so |recon|² = Σ_j |c_j[code_j]|²)."""
-    m, ksub, dsub = codebooks.shape
-    # flatten closure state: (m, ksub, dsub) and per-entry sq-norms
-    cb = codebooks.copy()
+    m = codebooks.shape[0]
     cb_sq = (codebooks * codebooks).sum(axis=2)  # (m, ksub)
+    codes_src = _PQ_CODES_SRC  # by value: the closure must not import server_spark
     schema = T.StructType(
         [
             embeddings.schema[id_col],
@@ -107,24 +153,16 @@ def encode_pq(
     def encode(batches):
         import pandas as pd
 
+        ns: dict = {}
+        exec(codes_src, ns)
         for pdf in batches:
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
             if len(mat) == 0:
                 continue
-            n = mat.shape[0]
-            codes = np.empty((n, m), dtype=np.uint8)
-            rsq = np.zeros(n)
+            codes = ns["_pq_codes"](mat, codebooks)
+            rsq = np.zeros(len(mat))
             for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                cbj = cb[j]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ cbj.T)
-                    + cb_sq[j][None, :]
-                )
-                cj = d2.argmin(axis=1)
-                codes[:, j] = cj
-                rsq += cb_sq[j][cj]
+                rsq += cb_sq[j][codes[:, j]]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
@@ -150,8 +188,7 @@ def adc_topk(
     cos ≈ (Σ_j LUT_j[code_j]) / (|q| · |recon|): the query side is
     exact, the corpus side is its reconstruction. Emits
     (query_id, vec_id, score_adc, rnk), rnk ≤ k per query."""
-    m, ksub, dsub = codebooks.shape
-    cb = codebooks
+    m = codebooks.shape[0]
     qrows = queries.select(qid_col, qvec_col).collect()  # bounded batch
     if not qrows:  # no queries (e.g. empty corpus slice) → empty result
         return encoded.sparkSession.createDataFrame(
@@ -160,19 +197,10 @@ def adc_topk(
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)
     qn = np.linalg.norm(qmat, axis=1)
-    # (nq, m, ksub) dot-product lookup tables, built once per batch
-    luts = np.stack(
-        [
-            qmat[:, j * dsub : (j + 1) * dsub] @ cb[j].T
-            for j in range(m)
-        ],
-        axis=1,
-    )
+    luts = _pq_luts(qmat, codebooks)  # built once per batch
     spark = encoded.sparkSession
     b = spark.sparkContext.broadcast((qids, qn, luts))
-    schema = (
-        f"{qid_col} long, {id_col} long, score_adc double"
-    )
+    schema = f"{qid_col} long, {id_col} long, score_adc double"
 
     def score(batches):
         import pandas as pd
@@ -226,13 +254,8 @@ def adc_topk(
                 )
 
     partial = encoded.mapInPandas(score, schema)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score_adc"), F.col(id_col)
-    )
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, F.round("score_adc", 6).alias("score_adc"), "rnk")
+    return _rank_topk(partial, k, [qid_col], id_col, "score_adc").select(
+        qid_col, id_col, F.round("score_adc", 6).alias("score_adc"), "rnk"
     )
 
 
@@ -274,117 +297,71 @@ def _ivfpq_encoded(idx, m: int, ksub: int, seed: int, cache_key, id_col):
     hit = _IVFPQ_CACHE.get(key) if cache_key else None
     if hit is not None:
         return hit
-    # Disk layer, mirroring ivf.cached_index: the code table is
-    # offline-built index state (at 100 TB it IS a written table —
-    # ~8 bytes/vector parquet partitioned by cluster — not a RAM
-    # cache), so steady-state queries and fresh processes reload
-    # instead of re-encoding; bench-session cache clearing doesn't
-    # force a re-encode either.
-    import os
-
-    from server_spark.similarity.ivf import _index_path
-
-    spark = idx.assigned.sparkSession
-    if cache_key:
-        path = _index_path(key)
-        cb_file = os.path.join(path, "codebooks.npy")
-        codes_dir = os.path.join(path, "codes")
-        try:
-            if os.path.exists(cb_file):
-                codebooks = np.load(cb_file)
-                encoded = spark.read.parquet(codes_dir)
-                hit = (codebooks, encoded)
-                _IVFPQ_CACHE[key] = hit
-                return hit
-        except Exception:
-            pass  # unreadable/partial → rebuild below
     cents = idx.centroids
-    dim = idx.dim
-    dsub = dim // m
-    # bounded residual training sample from the assigned lists,
-    # hash-ordered by (id, cluster) so list/ingest order doesn't bias
-    # the residual codebooks
-    rows = bounded_training_sample(
-        idx.assigned,
-        [idx.vec_col, "cluster"],
-        MAX_TRAIN_SAMPLE,
-        key_cols=[idx.id_col, "cluster"],
-    ).collect()
-    res = np.array(
-        [np.asarray(r[0], dtype=np.float64) - cents[r[1]] for r in rows]
-    )
-    if res.size == 0:  # empty corpus → empty residual codebooks
-        codebooks = np.zeros((m, 0, max(dsub, 0)))
-    else:
-        k_eff = min(ksub, len(res))
-        codebooks = np.stack(
-            [
-                _kmeans_fit(
-                    res[:, j * dsub : (j + 1) * dsub], k_eff, seed + j
-                )
-                for j in range(m)
-            ]
-        )
-    cb = codebooks
-    cb_sq = (codebooks * codebooks).sum(axis=2)
-    schema = T.StructType(
-        [
-            idx.assigned.schema[id_col],
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("codes", T.BinaryType()),
-            T.StructField("_nrm", T.DoubleType()),
-        ]
-    )
     vec_col = idx.vec_col
 
-    def encode(batches):
-        import pandas as pd
+    def build():
+        dsub = idx.dim // m
+        # bounded residual training sample from the assigned lists,
+        # hash-ordered by (id, cluster) so list/ingest order doesn't
+        # bias the residual codebooks
+        rows = bounded_training_sample(
+            idx.assigned,
+            [vec_col, "cluster"],
+            MAX_TRAIN_SAMPLE,
+            key_cols=[idx.id_col, "cluster"],
+        ).collect()
+        res = np.array(
+            [np.asarray(r[0], dtype=np.float64) - cents[r[1]] for r in rows]
+        )
+        if res.size == 0:  # empty corpus → empty residual codebooks
+            codebooks = np.zeros((m, 0, max(dsub, 0)))
+        else:
+            codebooks = _fit_codebooks(res, m, ksub, seed)
+        codes_src = _PQ_CODES_SRC  # by value: the closure must not import server_spark
+        schema = T.StructType(
+            [
+                idx.assigned.schema[id_col],
+                T.StructField("cluster", T.IntegerType()),
+                T.StructField("codes", T.BinaryType()),
+                T.StructField("_nrm", T.DoubleType()),
+            ]
+        )
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat -= cents[pdf["cluster"].values]
-            codes = np.empty((n, m), dtype=np.uint8)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ cb[j].T)
-                    + cb_sq[j][None, :]
+        def encode(batches):
+            import pandas as pd
+
+            ns: dict = {}
+            exec(codes_src, ns)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                mat = np.array(list(pdf[vec_col]), dtype=np.float64)
+                mat -= cents[pdf["cluster"].values]
+                codes = ns["_pq_codes"](mat, codebooks)
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col].values,
+                        "cluster": pdf["cluster"].values,
+                        "codes": [c.tobytes() for c in codes],
+                        "_nrm": pdf["_nrm"].values,
+                    }
                 )
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    "cluster": pdf["cluster"].values,
-                    "codes": [c.tobytes() for c in codes],
-                    "_nrm": pdf["_nrm"].values,
-                }
-            )
 
-    encoded = idx.assigned.select(
-        id_col, vec_col, "cluster", "_nrm"
-    ).mapInPandas(encode, schema).cache()
-    if cache_key:
-        try:
-            tmp = f"{path}.tmp.{os.getpid()}"
-            encoded.write.mode("overwrite").parquet(
-                os.path.join(tmp, "codes")
-            )
-            np.save(os.path.join(tmp, "codebooks.npy"), codebooks)
-            if not os.path.exists(cb_file):
-                os.replace(tmp, path)
-            else:  # another process won the race
-                import shutil
+        encoded = idx.assigned.select(
+            id_col, vec_col, "cluster", "_nrm"
+        ).mapInPandas(encode, schema).cache()
+        return codebooks, encoded
 
-                shutil.rmtree(tmp, ignore_errors=True)
-        except Exception:
-            pass  # persistence is an optimization; the cached DF works
-    hit = (codebooks, encoded)
-    if cache_key:
-        _IVFPQ_CACHE[key] = hit
+    if not cache_key:
+        return build()
+    # the code table is offline-built index state like the IVF
+    # assignment (at 100 TB a ~8 bytes/vector parquet table), so fresh
+    # processes and cleared sessions reload it instead of re-encoding
+    hit = _load_or_build(
+        idx.assigned.sparkSession, key, "codebooks.npy", "codes", build
+    )
+    _IVFPQ_CACHE[key] = hit
     return hit
 
 
@@ -420,28 +397,15 @@ def ivfpq_topk(
     Boundary-replicated vectors (n_assign lists) score once per list;
     a groupBy(query, id) max keeps the best replica deterministically
     before the final top-k window."""
-    from server_spark.similarity.ivf import (
-        _query_probes,
-        build_index,
-        cached_index,
-    )
-
     # cache only under an explicit corpus key — a made-up fallback key
     # would collide the on-disk index across different corpora and
     # silently serve candidates from the wrong one
     if cache_key:
         idx = cached_index(
-            embeddings,
-            cache_key=cache_key,
-            n_clusters=n_clusters,
-            seed=seed,
-            id_col=id_col,
-            vec_col=vec_col,
+            embeddings, cache_key, n_clusters, seed, id_col, vec_col
         )
     else:
-        idx = build_index(
-            embeddings, n_clusters, seed, id_col, vec_col
-        )
+        idx = build_index(embeddings, n_clusters, seed, id_col, vec_col)
     if idx.dim == 0:  # empty index → empty result, schema stable
         # (ivf.search's guard — without it the per-query cents @ qv
         # below raises a numpy shape error on the driver, r11 review)
@@ -457,16 +421,15 @@ def ivfpq_topk(
     cand = encoded.join(F.broadcast(probes), "cluster").filter(
         F.col(qid_col) != F.col(id_col)
     )
-    mm, kk, dsub = codebooks.shape
-    cb = codebooks
+    mm = codebooks.shape[0]
     cents = idx.centroids
     qrows = queries.select(qid_col, qvec_col).collect()  # bounded batch
     luts, qdotc = {}, {}
     for r in qrows:
         qv = np.asarray(r[1], dtype=np.float64)
-        luts[int(r[0])] = np.stack(
-            [qv[j * dsub : (j + 1) * dsub] @ cb[j].T for j in range(mm)]
-        )
+        # a one-row batch per query: a batched matmul over all
+        # queries would round differently in the last ulp
+        luts[int(r[0])] = _pq_luts(qv[None, :], codebooks)[0]
         qdotc[int(r[0])] = cents @ qv  # (n_clusters,)
     b = embeddings.sparkSession.sparkContext.broadcast((luts, qdotc))
     schema = f"{qid_col} long, {id_col} long, score_adc double"
@@ -511,15 +474,8 @@ def ivfpq_topk(
         .groupBy(qid_col, id_col)
         .agg(F.max("score_adc").alias("score_adc"))
     )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score_adc"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            qid_col, id_col, F.round("score_adc", 6).alias("score_adc"), "rnk"
-        )
+    return _rank_topk(scored, k, [qid_col], id_col, "score_adc").select(
+        qid_col, id_col, F.round("score_adc", 6).alias("score_adc"), "rnk"
     )
 
 
@@ -599,9 +555,6 @@ def ivfpq_refine_topk(
     ONE gated scan of the corpus with zero corpus-side shuffle; the
     exact dot runs codegen-unrolled on shortlist-sized input.
     """
-    from server_spark.parity import r4
-    from server_spark.similarity.cosine import dot_fixed, norm
-
     shortlist = ivfpq_topk(
         embeddings,
         queries,
@@ -631,20 +584,6 @@ def ivfpq_refine_topk(
         embeddings.select(id_col, vec_col)
         .join(F.broadcast(shortlist), id_col)
         .join(F.broadcast(qn), qid_col)
+        .withColumn("_nrm", norm(vec_col))
     )
-    scored = cand.select(
-        F.col(qid_col),
-        F.col(id_col),
-        r4(
-            dot_fixed(vec_col, qvec_col, dim)
-            / (norm(vec_col) * F.col("_qn"))
-        ).alias("score"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(qid_col, id_col, "score", "rnk")
-    )
+    return _exact_topk(cand, k, id_col, vec_col, qid_col, qvec_col, dim)

@@ -3,6 +3,7 @@ LSH, SimHash, hyperplane LSH, multimodal plumbing, fuzzy rank."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from server_spark.dedup import exact as ex
@@ -268,32 +269,87 @@ def test_sequence_packing_invariants(spark):
             running += r["n_tokens"]
 
 
-def test_ivf_index_persistence_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
-    """x14: the persisted index (centroids sidecar + assignment
-    parquet) reloads in a fresh cache and yields identical search
-    results to the freshly built index."""
+@pytest.mark.parametrize("method", ["ivf_topk", "ivfpq_topk"])
+def test_ivf_index_persistence_roundtrip(
+    spark, sf_dir, tmp_path, monkeypatch, method
+):
+    """x14/x49: the persisted index state (a .npy sidecar + a parquet
+    table: IVF centroids + assignment, IVFPQ residual codebooks + codes)
+    reloads in a fresh process cache and yields identical search
+    results to the freshly built state."""
     import tempfile
 
-    from server_spark.similarity import ivf
+    from server_spark.similarity import ivf, pq
 
+    def clear():
+        ivf._INDEX_CACHE.clear()
+        pq._IVFPQ_CACHE.clear()
+
+    topk = ivf.ivf_topk if method == "ivf_topk" else pq.ivfpq_topk
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    ivf._INDEX_CACHE.clear()
+    clear()
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    first = sorted(
-        map(tuple, ivf.ivf_topk(emb, queries, k=5, cache_key="t").collect())
-    )
+    first = sorted(map(tuple, topk(emb, queries, k=5, cache_key="t").collect()))
     assert (tmp_path / "server_spark_ivf").exists()
 
-    ivf._INDEX_CACHE.clear()  # force the disk-load path
-    second = sorted(
-        map(tuple, ivf.ivf_topk(emb, queries, k=5, cache_key="t").collect())
-    )
+    clear()  # force the disk-load path
+    second = sorted(map(tuple, topk(emb, queries, k=5, cache_key="t").collect()))
     assert first == second
-    ivf._INDEX_CACHE.clear()
+    clear()
+
+
+def test_exact_paths_match_brute_force(spark, sf_dir):
+    """Every method that ends in the shared exact rerank agrees with
+    brute force wherever its candidate set is complete: IVF probing
+    every list and IVFPQ + refine with a shortlist as large as the
+    corpus return brute force's rows exactly, and each LSH row carries
+    its pair's brute-force score, ranked by (score desc, id asc). The
+    brute-force path scores with the `dot` fold and the others with
+    the unrolled `dot_fixed`, so this also pins that the two agree
+    once r4-rounded."""
+    from server_spark.queries.extensions import _seeded_tables
+    from server_spark.similarity import ivf
+    from server_spark.similarity.pq import ivfpq_refine_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    n = emb.count()
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    k, n_clusters = 10, 8
+    brute = sorted(map(tuple, cos.brute_force_topk(emb, queries, k=k).collect()))
+    assert len(brute) == 4 * k
+
+    index = ivf.build_index(emb, n_clusters=n_clusters, cache=False)
+    full_probe = ivf.search(index, queries, k=k, n_probe=n_clusters)
+    assert sorted(map(tuple, full_probe.collect())) == brute
+
+    refined = ivfpq_refine_topk(
+        emb, queries, k=k, refine=-(-n // k), n_clusters=n_clusters,
+        n_probe=n_clusters,
+    )
+    assert sorted(map(tuple, refined.collect())) == brute
+
+    every = {
+        (r["query_id"], r["vec_id"]): r["score"]
+        for r in cos.brute_force_topk(emb, queries, k=n).collect()
+    }
+    lsh = cos.lsh_topk(emb, queries, _seeded_tables(), k=k, dim=64).collect()
+    assert lsh
+    by_query: dict[int, list] = {}
+    for r in lsh:
+        assert r["score"] == every[(r["query_id"], r["vec_id"])]
+        by_query.setdefault(r["query_id"], []).append(r)
+    for rows in by_query.values():
+        rows.sort(key=lambda r: r["rnk"])
+        assert [r["rnk"] for r in rows] == list(range(1, len(rows) + 1))
+        order = [(-r["score"], r["vec_id"]) for r in rows]
+        assert order == sorted(order)
+    emb.unpersist()
 
 
 def test_pii_scrub_redacts_and_counts(spark):

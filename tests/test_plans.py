@@ -439,10 +439,15 @@ def test_x58_dsir_takeordered_broadcast_vocab(plans):
     assert "BroadcastHashJoin" in p
 
 
-def test_x59_hard_negatives_rank_shape(plans):
-    """Hard-negative mining keeps x3's shape: broadcast query set,
-    one corpus scan, per-anchor WindowGroupLimit rank."""
-    p = plans("x59_hard_negatives")
+@pytest.mark.parametrize(
+    "name", ["x3_cosine_topk", "x11_lsh_cosine_topk", "x59_hard_negatives"]
+)
+def test_x59_hard_negatives_rank_shape(plans, name):
+    """Every query ranked by the shared exact rerank keeps x3's shape:
+    broadcast query set, one corpus scan, per-query WindowGroupLimit
+    rank. (x104 also ranks there, but its lazy barrier hides the rank
+    from the final plan.)"""
+    p = plans(name)
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
     assert "WindowGroupLimit" in p
 
