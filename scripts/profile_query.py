@@ -40,8 +40,7 @@ def main() -> int:
     ap.add_argument("--plans", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
+    from bench import _materialize as mat
     from server_spark import registry
     from server_spark.session import get_spark
 
@@ -49,11 +48,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     qs = registry.queries()
-
-    def mat(df):
-        df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-            F.count("_h"), F.expr("bit_xor(_h)")
-        ).collect()
 
     def job_count() -> int:
         return len(sc.statusTracker().getJobIdsForGroup(None))

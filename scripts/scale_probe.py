@@ -34,6 +34,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import _materialize  # noqa: E402
 from server_spark import registry  # noqa: E402
 from server_spark.session import get_spark  # noqa: E402
 
@@ -63,14 +64,6 @@ DEFAULT = [
     "x134_cluster_split", "x8_minhash_neardup", "x9_simhash_fingerprint",
     "x11_lsh_cosine_topk", "x14_ivf_topk", "x3_cosine_topk", "x1_exact_dedup",
 ]
-
-
-def _materialize(df) -> None:
-    from pyspark.sql import functions as F
-
-    df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-        F.count("_h"), F.expr("bit_xor(_h)")
-    ).collect()
 
 
 def main() -> None:

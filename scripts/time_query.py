@@ -29,19 +29,13 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
+    from bench import _materialize as mat
     from server_spark import registry
     from server_spark.session import get_spark
 
     spark = get_spark("time-query")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-
-    def mat(df):
-        df.select(F.xxhash64(*df.columns).alias("_h")).agg(
-            F.count("_h"), F.expr("bit_xor(_h)")
-        ).collect()
 
     for name in args.queries:
         if name not in qs:

@@ -44,14 +44,18 @@ SORT_KINDS = {
 }
 
 
-def collapse_mini_auctions(auctions: DataFrame) -> DataFrame:
+def collapse_mini_auctions(
+    auctions: DataFrame, lead_keys: Sequence[str] = ()
+) -> DataFrame:
     """A1 — collapse raw auctions into mini-auctions.
 
     One groupBy with map-side combine; `array_sort` fixes the
     nondeterministic `collect_list` order so results are stable and
-    oracle-comparable.
+    oracle-comparable. ``lead_keys`` are grouped on ahead of the
+    collapse key (the medallion's snapshot columns), so one call
+    collapses every snapshot at once.
     """
-    return auctions.groupBy(*COLLAPSE_KEYS).agg(
+    return auctions.groupBy(*lead_keys, *COLLAPSE_KEYS).agg(
         F.array_sort(F.collect_list("auc")).alias("auc_list"),
         F.count("*").alias("auc_count"),
         (F.col("buyout") / F.col("quantity")).alias("buyout_per"),

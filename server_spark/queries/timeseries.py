@@ -63,8 +63,7 @@ def p5_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="T7 — RetentionLimit pruning: keep only entries newer than the "
     "cutoff; at scale this is a partition drop, not a scan. Late: the "
-    "predicate family is driver-verified via p5 and the partition-drop "
-    "form via plans/medallion.prune_retention (pytest).",
+    "predicate family is driver-verified via p5.",
     tags=("filter", "timeseries"),
     late=True,
 )

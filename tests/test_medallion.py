@@ -1,5 +1,5 @@
 """End-to-end medallion pipeline test: synthetic realm dumps →
-bronze → silver → gold (prices + churn) → retention prune."""
+bronze → silver → gold (prices + churn)."""
 
 from __future__ import annotations
 
@@ -87,17 +87,6 @@ def test_idempotent_rerun(spark, pipeline):
     med.build_silver(spark, pipeline)
     after = spark.read.parquet(pipeline.silver).count()
     assert before == after
-
-
-def test_retention_prune(spark, pipeline):
-    before = spark.read.parquet(pipeline.gold_prices).count()
-    med.prune_retention(spark, pipeline, "2024-01-01")  # keeps all
-    pruned = spark.read.parquet(pipeline.gold_prices + "_pruned")
-    assert pruned.count() == before
-    # a future cutoff drops every partition (nothing left to write)
-    gold = spark.read.parquet(pipeline.gold_prices)
-    kept = gold.filter(F.col("dump_date") >= F.lit("2024-06-01").cast("date"))
-    assert kept.count() == 0
 
 
 def test_compaction_rewrites_fragmented_partitions(spark, tmp_path):
@@ -605,6 +594,86 @@ def test_crash_between_bronze_and_manifest_is_recoverable(spark, tmp_path):
     d2 = dump(t0 + dt.timedelta(hours=1), [3])
     assert med.ingest_bronze_incremental(spark, d2, paths) == 1
     assert spark.read.parquet(paths.bronze).count() == 3
+
+
+def test_mixed_orphan_delivery_appends_only_the_new_key(spark, tmp_path):
+    """One delivery carrying a crash-window orphan (in bronze, missing
+    from the manifest) and a genuinely new dump: only the new dump's
+    rows are appended, both keys are committed under one batch_id, and
+    the call counts both."""
+    paths = med.MedallionPaths(str(tmp_path / "lake"))
+    t0 = dt.datetime(2024, 1, 1, 10)
+    t1 = t0 + dt.timedelta(hours=1)
+
+    def dump(ts, aucs):
+        return spark.createDataFrame(
+            [(a, 100, "o", "r1", 9, 500, 1, "LONG", "eu", "r1", ts)
+             for a in aucs],
+            AUCTION,
+        )
+
+    # the crash state: t0's rows reached bronze, its manifest row didn't
+    (
+        dump(t0, [1, 2]).withColumn("dump_date", F.to_date("dump_ts"))
+        .write.mode("append")
+        .partitionBy("region", "realm_slug", "dump_date")
+        .parquet(paths.bronze)
+    )
+    assert med.ingest_bronze_incremental(
+        spark, dump(t0, [1, 2]).unionByName(dump(t1, [3, 4, 5])), paths
+    ) == 2
+    bronze = spark.read.parquet(paths.bronze)
+    per_dump = {
+        r["dump_ts"]: r["count"] for r in bronze.groupBy("dump_ts").count().collect()
+    }
+    assert per_dump == {t0: 2, t1: 3}
+    manifest = med.load_manifest(spark, paths).collect()
+    assert sorted((r["dump_ts"], r["n_rows"]) for r in manifest) == [
+        (t0, 2), (t1, 3)
+    ]
+    assert {r["batch_id"] for r in manifest} == {1}
+
+
+def test_delivery_job_budget(spark, tmp_path):
+    """Spark jobs per medallion phase for one dump landing on an
+    existing tree and for its re-delivery (ingest, then silver and gold
+    refreshed since the previous version). Each refresh collects its
+    scope once and prunes the scan on it; ingest collects the
+    delivery's new keys once. A phase that re-derives what it already
+    collected shows up here as extra jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    paths = med.MedallionPaths(str(tmp_path / "lake"))
+    t0 = dt.datetime(2024, 1, 1, 10)
+
+    def dump(ts, seed):
+        return spark.createDataFrame(
+            [(seed * 1000 + i, i % 20, f"o{i % 7}", "r1", 9,
+              100 + (i % 13) * 10, 1 + i % 3, "LONG", "eu", "r1", ts)
+             for i in range(200)],
+            AUCTION,
+        )
+
+    def deliver(label, raw, since):
+        counts = {}
+        try:
+            for phase, run in (
+                ("ingest", lambda: med.ingest_bronze_incremental(spark, raw, paths)),
+                ("silver", lambda: med.build_silver_incremental(spark, paths, since)),
+                ("gold", lambda: med.build_gold_prices_incremental(spark, paths, since)),
+            ):
+                group = f"test_medallion.budget.{label}.{phase}"
+                sc.setJobGroup(group, group)
+                run()
+                counts[phase] = len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return counts
+
+    deliver("first", dump(t0, 1), 0)
+    later = dump(t0 + dt.timedelta(hours=1), 2)
+    assert deliver("fresh", later, 1) == {"ingest": 8, "silver": 5, "gold": 5}
+    assert deliver("again", later, 2) == {"ingest": 2, "silver": 1, "gold": 1}
 
 
 def test_mergeable_distinct_sketches(spark, sf_dir):
