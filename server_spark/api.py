@@ -23,12 +23,29 @@ All functions return lazy DataFrames — the serving layer decides how
 to materialize (collect for a reply payload, write for an export).
 Every subject is a filter, sort or page over ONE of the per-session
 snapshots :func:`views` returns (the analog of the reference serving
-from its in-process Bolt snapshots). Each snapshot is a single
-partition sorted by its lookup key, so no request plans an Exchange:
-once ``serving_gate.warm_cache`` has cached the snapshots, a reply is
-one Spark job of one stage, and a key filter reads only the in-memory
-batches whose min/max statistics can match it. Pagination keeps the
-deterministic total order the operator layer guarantees.
+from its in-process Bolt snapshots). Two kinds of snapshot back them:
+
+* the raw auctions and the events' (user_id, ts, value) are table-
+  sized, so ``serving_gate.warm_cache`` caches them in memory, one
+  partition each, sorted by their lookup key, so a key filter reads
+  only the in-memory batches whose min/max statistics can match it.
+  The auctions and price-list-history subjects aggregate per request
+  over them.
+* every other view is collected once per session into a driver-held
+  LocalRelation, already sorted in reply order: one row per realm
+  (realms, mod_dates), per (region, day) (tokens), per owner (owners)
+  and per part (min_owner, prices; 200k × sf rows). Six subjects
+  have small replies fixed by their parameters, so a request over
+  one is only filter / project / limit, which the optimizer folds
+  into a LocalTableScan (ConvertToLocalRelation): the reply runs no
+  Spark job. A request-time ``orderBy`` would undo that (it plans a
+  range-partition sort), so these subjects never sort. The
+  items-query subject ranks the per-part view per request.
+
+A reply that runs a job runs one job of one stage with no Exchange.
+
+Pagination keeps the deterministic total order the operator layer
+guarantees.
 """
 
 from __future__ import annotations
@@ -45,8 +62,21 @@ from server_spark.operators import auctions as ops
 from server_spark.sources.synthetic import auctions
 
 
-def _snapshot(df: DataFrame, *keys: str) -> DataFrame:
+def _snapshot(df: DataFrame, *keys) -> DataFrame:
     return df.repartition(1).sortWithinPartitions(*keys)
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """``df``'s rows, in ``df``'s order, as a driver-held LocalRelation.
+    The rows go from the collect straight into the relation on the JVM
+    side: none crosses py4j, and the relation is not a Python RDD (a
+    ``spark.createDataFrame`` of Python rows is one, and every request
+    over it runs jobs)."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(
+        df._jdf.collectAsList(), df._jdf.schema()
+    )
+    return DataFrame(jdf, spark)
 
 
 def _realm_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +118,7 @@ def _mod_dates(v: Views) -> DataFrame:
             F.count("*").alias("n_events"),
         )
     )
-    return _snapshot(dates, "region_name", "realm_id")
+    return _local(_snapshot(dates, "region_name", "realm_id"))
 
 
 def _min_owner(v: Views) -> DataFrame:
@@ -96,49 +126,63 @@ def _min_owner(v: Views) -> DataFrame:
         F.col("p_partkey").alias("item"), F.col("p_name").alias("item_name")
     )
     least = v.auctions.groupBy("item").agg(F.min("owner").alias("_min_owner"))
-    return _snapshot(part.join(least, "item", "left"), "item")
+    return _local(_snapshot(part.join(least, "item", "left"), "item"))
+
+
+def _owners(v: Views) -> DataFrame:
+    # owners_query's rank: the shortest rendering first, then the owner
+    return _local(_snapshot(
+        ops.distinct_owners(v.auctions),
+        F.length(F.col("owner").cast("string")), "owner",
+    ))
 
 
 def _tokens(v: Views) -> DataFrame:
     from server_spark.queries.timeseries import w5_token_history
 
-    return _snapshot(
+    return _local(_snapshot(
         w5_token_history(v.spark, v.sf_dir), "region_name", "bucket_ts"
-    )
+    ))
 
 
-# name -> builder of each view. owners and min_owner read the auctions
-# view; every other view reads only the tables.
+# name -> builder of each view. auctions and events are table-sized
+# snapshots that warm_cache caches; every other view is a driver-held
+# LocalRelation, collected when it is built and sorted in reply order.
+# owners, min_owner and prices read the auctions view; every other
+# view reads only the tables.
 _BUILDERS = {
     # raw auctions, by item
     "auctions": lambda v: _snapshot(auctions(v.spark, v.sf_dir), "item"),
     # (user_id, ts, value), by user_id, ts
     "events": lambda v: _snapshot(_events(v.spark, v.sf_dir), "user_id", "ts"),
-    # distinct owners, by owner
-    "owners": lambda v: _snapshot(ops.distinct_owners(v.auctions), "owner"),
-    # every part's (item, item_name, _min_owner), by item
-    "min_owner": _min_owner,
     # (region_name, realm_id, realm_name), by region_name, realm_id
-    "realms": lambda v: _snapshot(
+    "realms": lambda v: _local(_snapshot(
         _realm_dim(v.spark, v.sf_dir), "region_name", "realm_id"
-    ),
+    )),
     # realm_modification_dates' full answer, by region_name, realm_id
     "mod_dates": _mod_dates,
     # W5 token_history's full answer, by region_name, bucket_ts
     "tokens": _tokens,
+    # distinct owners, by the length of their rendering, then owner
+    "owners": _owners,
+    # every part's (item, item_name, _min_owner), by item
+    "min_owner": _min_owner,
+    # A2 price_stats of every item, by item
+    "prices": lambda v: _local(_snapshot(ops.price_stats(v.auctions), "item")),
 }
 
 
 class Views:
     """The nine subjects' parameter-free relations over one ``sf_dir``,
     as attributes named after ``_BUILDERS``' keys. Each is built on
-    first use, once, and holds one realm-sized snapshot in one
-    partition, sorted by the key its subjects filter or page on.
-    Building on first use lets ``serving_gate.warm_cache`` assemble
-    one view while it caches another."""
+    first use, once: a driver-held view is collected then, a cached
+    view stays lazy until ``serving_gate.warm_cache`` caches it.
+    Building on first use lets ``warm_cache`` collect one view while
+    it caches another."""
 
     names = tuple(_BUILDERS)
-    derived = ("owners", "min_owner")  # the views read from another view
+    cached = ("auctions", "events")  # the views warm_cache caches
+    derived = ("owners", "min_owner", "prices")  # read from another view
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark, self.sf_dir = spark, sf_dir
@@ -159,10 +203,10 @@ _VIEWS_LOCK = threading.Lock()
 
 def views(spark: SparkSession, sf_dir: str) -> Views:
     """The per-session snapshots every subject is served from, one
-    :class:`Views` per ``(spark, sf_dir)``. They are lazy until
-    ``serving_gate.warm_cache`` caches them; each then holds one
-    realm-sized snapshot in one partition (the largest is the raw
-    auctions relation at the table's full row count).
+    :class:`Views` per ``(spark, sf_dir)``. The two cached views hold
+    one partition each once ``serving_gate.warm_cache`` has run (the
+    largest is the raw auctions relation at the table's full row
+    count); the driver-held views hold at most one row per part.
 
     The memo lives on the session object itself, so it dies with its
     session: a ``WeakKeyDictionary`` would pin the session (its views
@@ -228,10 +272,10 @@ def price_list(
     spark: SparkSession, sf_dir: str, item_ids: Sequence[int]
 ) -> DataFrame:
     """Per-item price stats for a requested item set (A2 behind the
-    price-list subject), aggregated over the requested items' rows of
-    the auctions snapshot only."""
-    live = ops.filter_by_items(views(spark, sf_dir).auctions, item_ids)
-    return ops.price_stats(live)
+    price-list subject): the requested items' rows of the per-item
+    stats, which are exact per item, so computing them once for every
+    item answers any item set."""
+    return ops.filter_by_items(views(spark, sf_dir).prices, item_ids)
 
 
 def price_list_history(
@@ -271,17 +315,15 @@ def owners_query(
     case-insensitive containment, deterministic rank."""
     # the canonical shape's owner is the numeric supplier key — the
     # substring match runs over its string form (the reference
-    # matches owner NAMES; same operator, different rendering)
-    rendered = views(spark, sf_dir).owners.select(
-        F.col("owner"), F.col("owner").cast("string").alias("_o")
-    )
-    # lower BOTH sides: lowering only the query made any letter in it
+    # matches owner NAMES; same operator, different rendering). The
+    # view is already in rank order: shortest rendering, then owner.
+    # Lower BOTH sides: lowering only the query made any letter in it
     # unmatchable the moment owners carry names (r11 review finding)
-    hits = rendered.filter(
-        F.lower(F.col("_o")).contains(query.lower())
-    )
+    rendered = F.lower(F.col("owner").cast("string"))
     return (
-        hits.orderBy(F.length("_o"), "owner").select("owner").limit(limit)
+        views(spark, sf_dir).owners
+        .filter(rendered.contains(query.lower()))
+        .limit(limit)
     )
 
 
@@ -307,10 +349,8 @@ def realm_status(
     """The status subject: the connected-realm list for one region
     (the reference replies with the realm roster + metadata; J2's
     hierarchy flatten, filtered to the requested region)."""
-    return (
-        views(spark, sf_dir).realms
-        .filter(F.col("region_name") == region_name)
-        .orderBy("realm_id")
+    return views(spark, sf_dir).realms.filter(
+        F.col("region_name") == region_name
     )
 
 
@@ -321,12 +361,12 @@ def realm_modification_dates(
     timestamps — the reference tracks per-realm dump downloaded/live
     times and serves them so callers can poll for staleness (S2's
     watermark, grouped per realm instead of one global max). The
-    per-realm aggregate is a snapshot of one row per realm; a request
-    filters it to the region, when given."""
+    per-realm aggregate is a snapshot of one row per realm, in reply
+    order; a request filters it to the region, when given."""
     dates = views(spark, sf_dir).mod_dates
-    if region_name is not None:
-        dates = dates.filter(F.col("region_name") == region_name)
-    return dates.orderBy("region_name", "realm_id")
+    if region_name is None:
+        return dates
+    return dates.filter(F.col("region_name") == region_name)
 
 
 def token_history(
@@ -349,15 +389,15 @@ def unmet_demand_list(
 ) -> DataFrame:
     """The unmet-demand subject: catalog items with zero live auctions
     from the watched owner set ``owner <= owner_cap``, served as a
-    deterministic, bounded list (distributed top-k, not a global
-    sort). An item has none exactly when it has no auction or its
-    smallest owner exceeds the cap — J5's anti join, since a null
-    owner never satisfies ``owner <= cap``."""
+    deterministic, bounded list: the first ``limit`` matches of the
+    item-ordered view, with no sort per request. An item has none
+    exactly when it has no auction or its smallest owner exceeds the
+    cap — J5's anti join, since a null owner never satisfies
+    ``owner <= cap``."""
     m = F.col("_min_owner")
     return (
         views(spark, sf_dir).min_owner
         .filter(m.isNull() | (m > owner_cap))
         .select("item", "item_name")
-        .orderBy("item")
         .limit(limit)
     )

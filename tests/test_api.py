@@ -130,10 +130,9 @@ def test_realm_modification_dates_watermarks(spark, sf_dir):
 
 def test_token_history_is_parameterized_w5(spark, sf_dir):
     """token-history subject ≡ the proven W5 operator sliced to the
-    region, and the region predicate reaches below the aggregate."""
-    import contextlib
-    import io
-
+    region, and no request aggregates: W5 runs once per session, and
+    the region predicate folds into the scan of its driver-held
+    answer."""
     from server_spark.queries.timeseries import w5_token_history
 
     got = api.token_history(spark, sf_dir, "ASIA")
@@ -145,15 +144,7 @@ def test_token_history_is_parameterized_w5(spark, sf_dir):
         if r["region_name"] == "ASIA"
     ]
     assert sorted(map(tuple, rows)) == sorted(map(tuple, want))
-    # the filter must be pushed below the aggregate (no post-agg Filter
-    # over the full region set): the region dim scan happens under a
-    # broadcast join, and the physical plan carries the literal into
-    # the scan side, not only above the HashAggregate
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        got.explain("formatted")
-    plan = buf.getvalue()
-    assert "ASIA" in plan.split("HashAggregate")[-1] or "PushedFilters" in plan
+    assert _plan_nodes(got) == ["LocalTableScan"]
 
 
 def test_unmet_demand_list_matches_j5(spark, sf_dir):
@@ -314,7 +305,8 @@ def test_query_auctions_cursor_mode_matches_offset_pages(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Per-session views: one job, no Exchange, same answers as the compositions
+# Per-session views: no job, or one without Exchange; same answers as the
+# per-request compositions
 # ---------------------------------------------------------------------------
 
 import pytest  # noqa: E402
@@ -325,37 +317,41 @@ REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
 
 @pytest.fixture(scope="module")
 def served(spark):
-    """The sf0.01 views, cached the way a serving process caches them
-    (dropped from the cache again after this module)."""
+    """The sf0.01 views, built the way a serving process builds them
+    (the cached ones dropped from the cache again after this module)."""
     from server_spark.serving_gate import warm_cache
 
     warm_cache(spark, SF_SERVED)
     views = api.views(spark, SF_SERVED)
     yield views
-    for name in views.names:
+    for name in views.cached:
         getattr(views, name).unpersist()
 
 
-def _exchanges(spark, df) -> list[str]:
-    """Names of the Exchange nodes in ``df``'s executed plan. Cached
-    relations are leaves here: their own build plan is not part of a
-    request."""
-    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+def _plan_nodes(df) -> list[str]:
+    """Names of the nodes in ``df``'s executed plan, an adaptive plan's
+    wrappers and stages unwrapped. Cached relations are leaves here:
+    their own build plan is not part of a request."""
+    conv = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters
     found, stack = [], [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
         name = node.nodeName()
         if name == "AdaptiveSparkPlan":
             stack.append(node.executedPlan())
-        elif "Exchange" in name or name in (
-            "ShuffleQueryStage", "BroadcastQueryStage"
-        ):
-            found.append(name)
         elif name == "ResultQueryStage":
             stack.append(node.plan())
         else:
+            found.append(name)
             stack.extend(conv.asJava(node.children()))
     return found
+
+
+def _exchanges(df) -> list[str]:
+    return [
+        n for n in _plan_nodes(df) if "Exchange" in n
+        or n in ("ShuffleQueryStage", "BroadcastQueryStage")
+    ]
 
 
 def _one_of_each(spark, sf):
@@ -383,9 +379,19 @@ def _one_of_each(spark, sf):
     }
 
 
+# the subjects whose request is only filter / project / limit over a
+# driver-held view
+LOCAL_SUBJECTS = (
+    "price_list", "owners_query", "realm_status", "realm_modification_dates",
+    "token_history", "unmet_demand_list",
+)
+
+
 def test_each_subject_is_one_job_without_exchange(spark, served):
-    """Over cached views a request is one job of one stage, and its
-    executed plan moves no rows between partitions."""
+    """A request over a driver-held view runs no job: its executed plan
+    is one LocalTableScan. A request over a cached view is one job of
+    one stage, and its executed plan moves no rows between
+    partitions."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     try:
@@ -394,6 +400,11 @@ def test_each_subject_is_one_job_without_exchange(spark, served):
             sc.setJobGroup(group, name)
             rows = df.collect()
             jobs = list(tracker.getJobIdsForGroup(group))
+            assert rows or name == "auctions_cursor", f"{name}: empty reply"
+            if name in LOCAL_SUBJECTS:
+                assert jobs == [], f"{name}: jobs {jobs}"
+                assert _plan_nodes(df) == ["LocalTableScan"], name
+                continue
             assert len(jobs) == 1, f"{name}: jobs {jobs}"
             # a cached view's build stages stay in the job's DAG, skipped
             ran = [
@@ -401,8 +412,7 @@ def test_each_subject_is_one_job_without_exchange(spark, served):
                 if tracker.getStageInfo(sid).numCompletedTasks
             ]
             assert len(ran) == 1, f"{name}: stages run {ran}"
-            assert _exchanges(spark, df) == [], name
-            assert rows or name == "auctions_cursor", f"{name}: empty reply"
+            assert _exchanges(df) == [], name
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
@@ -444,18 +454,23 @@ def _same_rows(got, want) -> bool:
         unique=True,
     ),
     region=st.sampled_from((*REGIONS, "ATLANTIS", None)),
+    owner_query=st.text(alphabet="0123456789", max_size=3),
 )
-@example(owner_cap=-1, limit=120, items=[1, 2], region="ATLANTIS")
-@example(owner_cap=-1, limit=5, items=[3], region=None)
+@example(owner_cap=-1, limit=120, items=[1, 2], region="ATLANTIS",
+         owner_query="")
+@example(owner_cap=-1, limit=5, items=[3], region=None, owner_query="1")
 @_PROP_SETTINGS
 def test_views_match_per_request_compositions(
-    spark, served, owner_cap, limit, items, region
+    spark, served, owner_cap, limit, items, region, owner_query
 ):
     """The view-backed subjects answer exactly what the per-request
     compositions they replace answer over the raw tables: J5's anti
-    join, price_stats over the filtered auctions, the events ⋈
-    customer ⋈ realm aggregate, and W5 filtered by region (None: the
-    mod-dates of every region)."""
+    join, price_stats over the filtered auctions, the ranked substring
+    search over the distinct owners, the events ⋈ customer ⋈ realm
+    aggregate (None: the mod-dates of every region), region ⋈ nation
+    ordered by realm, and W5 filtered by region. The ordered ones pin
+    that the driver-held views keep reply order with no sort per
+    request."""
     from pyspark.sql import functions as F
 
     from server_spark import tables
@@ -476,6 +491,16 @@ def test_views_match_per_request_compositions(
     want = sorted(ops.price_stats(ops.filter_by_items(raw, items)).collect(), key=key)
     got = sorted(api.price_list(spark, sf, items).collect(), key=key)
     assert _same_rows(got, want)
+
+    rendered = F.col("owner").cast("string")
+    want = (
+        ops.distinct_owners(raw)
+        .filter(F.lower(rendered).contains(owner_query.lower()))
+        .orderBy(F.length(rendered), "owner")
+        .limit(limit)
+    )
+    got = api.owners_query(spark, sf, owner_query, limit=limit)
+    assert got.collect() == want.collect()
 
     cust = tables.load(spark, sf, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_nationkey").alias("realm_id")
@@ -501,8 +526,49 @@ def test_views_match_per_request_compositions(
     if region is None:
         return
 
+    got = api.realm_status(spark, sf, region)
+    assert got.collect() == realms.orderBy("realm_id").collect()
+
     want = w5_token_history(spark, sf).filter(F.col("region_name") == region)
     got = api.token_history(spark, sf, region)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     if region == "ATLANTIS":
         assert not got.collect()
+        assert not api.realm_status(spark, sf, region).collect()
+
+
+def test_only_table_sized_views_are_cached(spark, served):
+    """After warm_cache, the raw auctions and events are the only views
+    in the cache. Every other view is a driver-held LocalRelation
+    within its documented bound: one row per realm (realms,
+    mod_dates), per (region, day) (tokens), per owner (owners) and per
+    part (min_owner, prices)."""
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
+
+    from server_spark import tables
+
+    def rows(table: str) -> int:
+        return tables.load(spark, SF_SERVED, table).count()
+
+    days = tables.load(spark, SF_SERVED, "events").select(
+        F.countDistinct(F.date_trunc("day", "ts"))
+    ).first()[0]
+    bounds = {
+        "realms": rows("nation"),
+        "mod_dates": rows("nation"),
+        "tokens": rows("region") * days,
+        "owners": rows("supplier"),
+        "min_owner": rows("part"),
+        "prices": rows("part"),
+    }
+    assert set(bounds) == set(served.names) - set(served.cached)
+    for name in served.names:
+        view = getattr(served, name)
+        assert (view.storageLevel != StorageLevel.NONE) == (
+            name in served.cached
+        ), name
+        if name in bounds:
+            plan = view._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "LocalRelation", name
+            assert 0 < view.count() <= bounds[name], name
