@@ -36,6 +36,44 @@ def watermark_dedup(
     )
 
 
+def session_ids(
+    df: DataFrame,
+    key: str,
+    ts: str,
+    gap_minutes: int,
+    tiebreak: str | None = "event_id",
+) -> DataFrame:
+    """T4 — gaps-and-islands session numbering: adds ``session_id``
+    (bigint, from 1 per ``key``), which steps up at a key's first event
+    and wherever the gap from the previous event exceeds
+    ``gap_minutes``.
+
+    Expressed with lag + cumulative sum (identical SQL exists for the
+    DuckDB oracle); Spark's native ``session_window`` gives the same
+    buckets but isn't oracle-expressible verbatim. Gaps are compared
+    in whole microseconds (``unix_micros``), so a gap a fraction of a
+    second past the limit still splits.
+
+    ``tiebreak`` orders rows tied on ``ts`` deterministically; it is
+    part of the API because a hardcoded 'event_id' fails at plan time
+    on any schema without that column. Pass None only when (key, ts)
+    is known unique.
+    """
+    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    w = Window.partitionBy(key).orderBy(*order)
+    micros = F.unix_micros(F.col(ts))
+    gap = micros - F.lag(micros).over(w)
+    new_session = F.when(
+        gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), F.lit(1)
+    ).otherwise(F.lit(0))
+    return df.withColumn(
+        "session_id",
+        F.sum(new_session)
+        .over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .cast("long"),
+    )
+
+
 def sessionize(
     df: DataFrame,
     key: str,
@@ -43,29 +81,9 @@ def sessionize(
     gap_minutes: int,
     tiebreak: str | None = "event_id",
 ) -> DataFrame:
-    """T4 — session windows via gaps-and-islands: a new session starts
-    when the gap from the previous event exceeds ``gap_minutes``.
-
-    Expressed with lag + cumulative sum (identical SQL exists for the
-    DuckDB oracle); Spark's native ``session_window`` gives the same
-    buckets but isn't oracle-expressible verbatim.
-
-    ``tiebreak`` orders rows tied on ``ts`` deterministically; it is
-    part of the API (r11 review finding: a hardcoded 'event_id' made
-    the generic operator fail at plan time on any schema without that
-    column). Pass None only when (key, ts) is known unique.
-    """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = Window.partitionBy(key).orderBy(*order)
-    gap = F.col(ts).cast("long") - F.lag(F.col(ts).cast("long")).over(w)
-    new_session = F.when(
-        gap.isNull() | (gap > gap_minutes * 60), F.lit(1)
-    ).otherwise(F.lit(0))
-    sess = df.withColumn(
-        "session_id", F.sum(new_session).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        )
-    )
+    """T4 — session windows: one row per (key, session_id) of
+    ``session_ids`` with its first and last ``ts`` and event count."""
+    sess = session_ids(df, key, ts, gap_minutes, tiebreak)
     return sess.groupBy(key, "session_id").agg(
         F.min(ts).alias("session_start"),
         F.max(ts).alias("session_end"),

@@ -129,9 +129,14 @@ def _gated_edges(docs: DataFrame) -> DataFrame:
     signatures are array folds over the same row, and verification
     intersects the two 8-byte token arrays per candidate pair. The
     token-set relation is the single shared materialization (feeds
-    the signature/banding branch and both verify joins).
+    the signature/banding branch and both verify joins). It is
+    materialized eagerly: a lazy checkpoint is computed by whichever of
+    its concurrently running consumer stages reaches it first, and the
+    first job to end truncates its lineage while the others still run,
+    so their SQL metric updates go to accumulators the driver has
+    already dropped (``non-existent accumulator``).
     """
-    vsets = mh.md5_val_arrays(docs, n=3).transform(lazy_barrier)
+    vsets = mh.md5_val_arrays(docs, n=3).transform(barrier)
     # the size-ratio prune (J <= min/max, exact at the 0.7 gate) drops
     # candidates before the distinct shuffle and the verify joins —
     # semantics-preserving, so the SQL twin needs no mirror

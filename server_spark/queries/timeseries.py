@@ -359,24 +359,8 @@ def t2_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     late=True,
 )
 def t4_session_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = F.unix_micros(F.col("ts")) - F.lag(
-        F.unix_micros(F.col("ts"))
-    ).over(w)
-    new_session = F.when(
-        gap_us.isNull() | (gap_us > SESSION_GAP_MIN * 60 * 1_000_000), F.lit(1)
-    ).otherwise(F.lit(0))
-    numbered = ev.withColumn(
-        "session_id",
-        F.sum(new_session)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long"),
-    )
-    return numbered.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        F.count("*").alias("n_events"),
+    return ts_ops.sessionize(
+        _events(spark, sf_dir), "user_id", "ts", SESSION_GAP_MIN
     )
 
 
@@ -1859,26 +1843,10 @@ _T25_MAX_STEPS = 8
     late=True,
 )
 def t25_common_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    flagged = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        F.when(
-            (
-                F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-                > gap_us
-            )
-            | F.lag("ts").over(w).isNull(),
-            1,
-        ).otherwise(0).alias("new_session"),
+    ev = _events(spark, sf_dir).select(
+        "user_id", "ts", "event_id", "event_type"
     )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).cast("bigint"),
-    )
+    numbered = ts_ops.session_ids(ev, "user_id", "ts", SESSION_GAP_MIN)
     ordered = F.array_sort(
         F.collect_list(
             F.struct(

@@ -387,15 +387,39 @@ LOCAL_SUBJECTS = (
 )
 
 
-def test_each_subject_is_one_job_without_exchange(spark, served):
-    """A request over a driver-held view runs no job: its executed plan
-    is one LocalTableScan. A request over a cached view is one job of
-    one stage, and its executed plan moves no rows between
-    partitions."""
+def _subject_functions() -> list[str]:
+    """Every public api function that answers a request: it takes
+    ``(spark, sf_dir, ...)`` and is not the views accessor."""
+    import inspect
+
+    return sorted(
+        name for name, fn in inspect.getmembers(api, inspect.isfunction)
+        if fn.__module__ == api.__name__ and not name.startswith("_")
+        and name != "views"
+        and list(inspect.signature(fn).parameters)[:2] == ["spark", "sf_dir"]
+    )
+
+
+def test_each_subject_is_one_job_without_exchange(spark, served, monkeypatch):
+    """Every subject has a request here. A request over a driver-held
+    view runs no job: its executed plan is one LocalTableScan. A
+    request over a cached view is one job of one stage, and its
+    executed plan moves no rows between partitions."""
+    subjects, requested = _subject_functions(), set()
+    for subject in subjects:
+        def record(*args, _subject=subject, _fn=getattr(api, subject), **kw):
+            requested.add(_subject)
+            return _fn(*args, **kw)
+        monkeypatch.setattr(api, subject, record)
+    requests = _one_of_each(spark, SF_SERVED)
+    monkeypatch.undo()
+    missing = sorted(set(subjects) - requested)
+    assert not missing, f"subjects with no request in _one_of_each: {missing}"
+
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     try:
-        for name, df in _one_of_each(spark, SF_SERVED).items():
+        for name, df in requests.items():
             group = f"test_api.one_job.{name}"
             sc.setJobGroup(group, name)
             rows = df.collect()

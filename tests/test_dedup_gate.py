@@ -36,6 +36,20 @@ def test_gated_edges_match_exact_baseline(spark, sf_dir):
     assert len(gated) > 0
 
 
+def test_gated_edges_shared_token_sets_are_materialized(spark, sf_dir):
+    """Every checkpoint the edge plan reads is materialized before the
+    plan runs, so no concurrently running stage computes one whose
+    lineage another job truncates (which drops the stage's SQL metric
+    updates)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    edges = _gated_edges(docs)
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    leaves = conv.asJava(edges._jdf.queryExecution().analyzed().collectLeaves())
+    rdds = [leaf.rdd() for leaf in leaves if leaf.nodeName() == "LogicalRDD"]
+    assert rdds, "the edge plan reads no checkpoint"
+    assert all(rdd.isCheckpointed() for rdd in rdds)
+
+
 def test_jaccard_verify_scores_match_exact(spark, sf_dir):
     """The array-intersect verification path must produce the same
     (pair, n_common, jaccard) rows as the inverted-index join when fed

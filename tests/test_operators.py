@@ -54,6 +54,10 @@ def test_sessionize_golden(spark):
         (3, 1, _ts("2024-01-01T10:55:00")),
         # user 2: one session
         (4, 2, _ts("2024-01-01T08:00:00")),
+        # user 3: two sessions, the gap 500 ms past 30 min (a gap
+        # truncated to whole seconds would read exactly 30 min)
+        (5, 3, _ts("2024-01-01T09:00:00")),
+        (6, 3, _ts("2024-01-01T09:30:00.500")),
     ]
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
     out = ts_ops.sessionize(df, "user_id", "ts", gap_minutes=30).collect()
@@ -62,6 +66,7 @@ def test_sessionize_golden(spark):
         by_user.setdefault(r["user_id"], []).append(r["n_events"])
     assert sorted(by_user[1]) == [1, 2]
     assert by_user[2] == [1]
+    assert by_user[3] == [1, 1]
 
 
 def test_watermark_dedup_deterministic(spark):
