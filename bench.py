@@ -58,15 +58,6 @@ def _materialize(df) -> None:
 
 
 def main() -> None:
-    # Host-speed probe BEFORE any Spark work (and again at the end):
-    # the artifact carries the score so bench_diff.py can tell "the
-    # host was 1.5x slower this run" from "a plan regressed" and defer
-    # adjudication instead of relying on manual ledger notes
-    # (SCALE.md r10 contended-window entry; VERDICT r10 item 5).
-    from scripts.calibrate import score as _cal_score
-
-    cal_start = _cal_score()
-
     spark = get_spark("server-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
@@ -76,13 +67,6 @@ def main() -> None:
 
     # Warmup: run the first headline query once, discard timing.
     _materialize(qs[names[0]](spark, SF_DIR))
-    # JVM/shuffle calibration leg (r12): timed through the live
-    # session so it drifts WITH the queries — the CPU-only probe can
-    # split from query drift when contention is JVM/IO-side (r11:
-    # probe 0.91x faster, queries 1.13x slower).
-    from scripts.calibrate import jvm_score as _jvm_score
-
-    jvm_start = _jvm_score(spark)
     # Pre-build the IVF index (disk-cached, keyed by sf_dir): index
     # construction is the offline step at scale, so x14's timed run
     # should measure SEARCH, not a cold k-means fit.
@@ -145,71 +129,6 @@ def main() -> None:
             samples.append(round(time.perf_counter() - t0, 3))
         timings[name] = sorted(samples)[1]  # median of 3
 
-    # end-of-run JVM leg BEFORE --recheck may stop the session
-    jvm_end = _jvm_score(spark)
-
-    # Contended-run protocol (--recheck, VERDICT r9 item 6): the r9
-    # close ledger hand-adjudicated one contended run where 10 queries
-    # "regressed" purely from sandbox contention, using fresh-session
-    # isolated medians. Automated here: with --recheck, every query
-    # moving >1.15x vs the committed baseline is re-timed in a FRESH
-    # subprocess session (scripts/time_query.py, warmup + 3 repeats)
-    # and the isolated MEDIAN becomes its number of record; the raw
-    # in-bench samples are kept in the artifact under "raw_flagged"
-    # for the record. Off by default — the driver's verbatim
-    # `python bench.py` stays one pass; round-close runs add the flag.
-    recheck: dict[str, float] = {}
-    raw_flagged: dict[str, float] = {}
-    if "--recheck" in sys.argv:
-        movers = [
-            n
-            for n, t in timings.items()
-            if base.get(n, 0) >= 0.2 and t / base[n] > 1.15
-        ]
-        if movers:
-            import re
-            import subprocess
-
-            # TRULY isolated: the parent session's JVM (32 executor
-            # threads, pending GC) otherwise contends with the
-            # subprocess and the "isolated" median lands WORSE than
-            # the in-bench sample it was meant to adjudicate
-            # (observed: x9 1.72s in-bench → 2.77s in a recheck that
-            # overlapped the live JVM → 1.55s genuinely isolated).
-            # All timed work is done at this point.
-            spark.stop()
-
-            proc = subprocess.run(
-                [
-                    sys.executable,
-                    str(Path(__file__).resolve().parent / "scripts" / "time_query.py"),
-                    "-n", "3", "--sf", SF_DIR, *movers,
-                ],
-                capture_output=True,
-                text=True,
-            )
-            for m in re.finditer(
-                r"^(\w+): min=[\d.]+s median=([\d.]+)s",
-                proc.stdout,
-                re.M,
-            ):
-                name, med = m.group(1), float(m.group(2))
-                raw_flagged[name] = timings[name]
-                recheck[name] = med
-                timings[name] = med
-            # a failed/partial recheck must FAIL LOUDLY, not silently
-            # ship the contended in-bench numbers as the record (a
-            # missing recheck key is indistinguishable from "no
-            # movers" in the artifact otherwise)
-            missing = [n for n in movers if n not in recheck]
-            if proc.returncode != 0 or missing:
-                raise SystemExit(
-                    f"--recheck failed (rc={proc.returncode}, "
-                    f"unmeasured movers={missing}):\n{proc.stderr[-2000:]}"
-                )
-
-    cal_end = _cal_score()
-
     # parse a trailing "sf<number>" path component; anything else
     # falls back to the raw dir string — a ValueError at the very end
     # of the run would discard every timing (r11 review finding)
@@ -235,8 +154,8 @@ def main() -> None:
         # commit overwrote BENCH_FULL.json with that 8-core map, and
         # the bench gate then flagged the core-scaling Python queries
         # (x135/x136, mapInPandas) as fake 2x "regressions" against the
-        # 32-core baseline. Recording cpus lets bench_diff DEFER
-        # adjudication across mismatched-core artifacts instead.
+        # 32-core baseline. Recording cpus keeps a map comparable
+        # only with maps taken at the same core count.
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         # r2+: full-column xxhash64 materialization (r1 used count(),
         # which let Catalyst prune timed expressions — totals are not
@@ -247,21 +166,7 @@ def main() -> None:
         # re-run twice and record the MEDIAN of the 3 samples
         "sampling": "1-pass; flagged outliers = median-of-3",
         "remeasured": sorted(flagged),
-        # fixed-workload host-speed probe (scripts/calibrate.py),
-        # seconds at run start/end — bench_diff defers adjudication
-        # when this drifts >1.3x vs the baseline's recorded score
-        "calibration_sec": {"start": cal_start, "end": cal_end},
-        # JVM/shuffle probe leg (r12) — drifts with the queries;
-        # bench_diff takes the more pessimistic of the two ratios
-        # when both artifacts carry both legs
-        "calibration_jvm_sec": {"start": jvm_start, "end": jvm_end},
     }
-    if recheck:
-        # isolated-median numbers of record + the raw in-bench samples
-        # ("value"/"queries" above already reflect the medians — the
-        # recheck pass ran before the artifact was assembled)
-        full["recheck_isolated_median"] = recheck
-        full["raw_flagged"] = raw_flagged
     (Path(__file__).resolve().parent / "BENCH_FULL.json").write_text(
         json.dumps(full, indent=1) + "\n"
     )
@@ -273,7 +178,7 @@ def compact_line(full: dict, timings: dict[str, float]) -> str:
 
     Every unbounded field of the full artifact is replaced by a
     bounded summary: the per-query map keeps only headline + the 12
-    slowest, the remeasured/recheck NAME LISTS become counts (the r11
+    slowest, the remeasured NAME LIST becomes a count (the r11
     regression: 80 flagged names overflowed the driver's 2 KB stdout
     tail and truncated the line's head — VERDICT r11 item 1). The
     complete versions of all of these live in BENCH_FULL.json, which
@@ -285,11 +190,8 @@ def compact_line(full: dict, timings: dict[str, float]) -> str:
     compact["queries"] = {
         n: timings[n] for n in HEADLINE if n in timings
     } | slowest
-    # bounded stand-ins for the unbounded-name-list fields
+    # bounded stand-in for the unbounded name list
     compact["n_remeasured"] = len(compact.pop("remeasured", []))
-    if compact.pop("recheck_isolated_median", None) is not None:
-        compact["n_rechecked"] = len(full["recheck_isolated_median"])
-    compact.pop("raw_flagged", None)
     compact["queries_note"] = "headline+12 slowest; full map in BENCH_FULL.json"
     line = json.dumps(compact)
     # Belt over suspenders: if a future field regrows the line past

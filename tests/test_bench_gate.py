@@ -1,10 +1,12 @@
-"""Standing per-query bench-regression gate (VERDICT r4 item 1).
+"""bench.py's stdout contract.
 
-Pure-file test — no Spark session. It re-runs scripts/bench_diff.py's
-comparison over the artifacts in the working tree, so the end-of-round
-pytest run fails if BENCH_FULL.json carries a >1.5x per-query
-regression vs scripts/bench_baseline.json that SCALE.md's
-``## Bench waivers`` section doesn't name a cause for.
+``python bench.py`` is run verbatim and only the last ~2 KB of its
+stdout is kept, so the run must end in ONE JSON line under
+``bench.COMPACT_LINE_MAX_BYTES`` that still carries the headline
+fields (``metric``, ``value``, ``n_queries``, the headline queries).
+The full per-query map goes to BENCH_FULL.json. The re-measure pass
+flags outliers against scripts/bench_baseline.json, so that file must
+stay a parseable full map. Pure-file tests, no Spark session.
 """
 
 from __future__ import annotations
@@ -16,230 +18,16 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import pytest  # noqa: E402
-
-from scripts.bench_diff import (  # noqa: E402
-    BASELINE,
-    FRESH,
-    BenchArtifactError,
-    combined_cal_ratio,
-    cpus_mismatch,
-    deferral_cal_ratio,
-    diff,
-    load_artifact,
-    load_doc,
-    load_queries,
-    waivers,
-)
-
-
-def _skip_if_cpu_counts_differ(base_doc, fresh_doc):
-    """Mirror of the CLI's core-count deferral (r15): a fresh map
-    recorded at a different core count than the baseline measures
-    scaling, not plans — skip, same as a contended window."""
-    mm = cpus_mismatch(base_doc, fresh_doc)
-    if mm is not None:
-        pytest.skip(
-            f"adjudication deferred: baseline at {mm[0]} cpus vs fresh "
-            f"at {mm[1]} — re-run bench.py at the baseline's core count"
-        )
-
-
-def test_no_unwaived_bench_regressions():
-    # cal-aware, mirroring the CLI gate exactly (r12): the pytest gate
-    # and `python scripts/bench_diff.py` must not disagree about the
-    # same pair of artifacts, or one of them is theater — including
-    # the contended-window deferral (CLI exit 3 → pytest skip)
-    from scripts.bench_diff import CAL_DRIFT_MAX
-
-    base_doc, fresh_doc = load_doc(BASELINE), load_doc(FRESH)
-    _skip_if_cpu_counts_differ(base_doc, fresh_doc)
-    base, fresh = base_doc["queries"], fresh_doc["queries"]
-    cal_ratio = combined_cal_ratio(base_doc, fresh_doc)
-    regs, _, _ = diff(base, fresh, cal_ratio)
-    waived = waivers()
-    unwaived = [
-        f"{name}: {b:.2f}s -> {f:.2f}s ({ratio:.2f}x)"
-        for name, b, f, ratio in regs
-        if name not in waived
-    ]
-    defer_ratio = deferral_cal_ratio(base_doc, fresh_doc)
-    if unwaived and defer_ratio is not None and defer_ratio > CAL_DRIFT_MAX:
-        pytest.skip(
-            f"adjudication deferred: fresh run's worst probe window "
-            f"{defer_ratio:.2f}x slower than the baseline; re-run "
-            f"bench.py in a clean window (pending: {'; '.join(unwaived)})"
-        )
-    assert not unwaived, (
-        "per-query bench regressions >1.5x without a SCALE.md "
-        "'## Bench waivers' entry:\n" + "\n".join(unwaived)
-    )
-
-
-def test_no_unwaived_regressions_since_last_driver_round():
-    """The --since gate, made NON-OPTIONAL (VERDICT r9 item 5): a
-    mid-round ``--accept`` refreshes scripts/bench_baseline.json and
-    bakes the round's own regressions into the pinned gate, so that
-    gate alone proves little. This test additionally diffs the fresh
-    BENCH_FULL.json against the LATEST driver round artifact
-    (BENCH_r{N}.json — numbers frozen BEFORE this round started,
-    drift-normalized); any >1.5x mover must carry a SCALE.md
-    '## Bench waivers' entry naming the cause. pytest always runs, so
-    an --accept can never again be the only evidence."""
-    rounds = sorted(REPO.glob("BENCH_r[0-9][0-9].json"))
-    assert rounds, "no driver round artifacts found"
-    try:
-        base_doc = load_doc(rounds[-1])
-    except BenchArtifactError as e:
-        # one malformed driver artifact must not wedge the suite
-        # (VERDICT r11 item 1b) — skip loudly, never SystemExit
-        pytest.skip(f"since-gate skipped, artifact unrecoverable: {e}")
-    base = base_doc["queries"]
-    fresh_doc = load_doc(FRESH)
-    _skip_if_cpu_counts_differ(base_doc, fresh_doc)
-    fresh = fresh_doc["queries"]
-    cal_ratio = combined_cal_ratio(base_doc, fresh_doc)
-    regs, _, _ = diff(base, fresh, cal_ratio)
-    waived = waivers()
-    unwaived = [
-        f"{name}: {b:.2f}s -> {f:.2f}s ({ratio:.2f}x norm)"
-        for name, b, f, ratio in regs
-        if name not in waived
-    ]
-    from scripts.bench_diff import CAL_DRIFT_MAX
-
-    defer_ratio = deferral_cal_ratio(base_doc, fresh_doc)
-    if unwaived and defer_ratio is not None and defer_ratio > CAL_DRIFT_MAX:
-        pytest.skip(
-            f"adjudication deferred: fresh run's worst probe window "
-            f"{defer_ratio:.2f}x slower than the {rounds[-1].name} "
-            f"window; re-run bench.py in a clean window "
-            f"(pending: {'; '.join(unwaived)})"
-        )
-    assert not unwaived, (
-        f"regressions >1.5x vs {rounds[-1].name} (pre-round frozen "
-        "numbers) without a SCALE.md '## Bench waivers' entry:\n"
-        + "\n".join(unwaived)
-    )
+BASELINE = REPO / "scripts" / "bench_baseline.json"
 
 
 def test_baseline_artifact_is_valid():
     """The baseline snapshot must stay a parseable full bench map —
-    an accidental truncation would make the gate silently vacuous."""
+    an accidental truncation would silently stop the re-measure pass
+    from flagging outliers against it."""
     base = json.loads(BASELINE.read_text())
     assert base.get("queries") and len(base["queries"]) >= 50
     assert base.get("materializer") == "xxhash64-all-columns"
-
-
-def test_calibration_deferral_protocol():
-    """r11 (VERDICT r10 item 5): bench artifacts carry a fixed-
-    workload host-calibration score, and bench_diff defers
-    adjudication (exit 3) instead of failing when the fresh run's
-    host was >1.3x slower than the baseline window — the automated
-    replacement for r10's hand-written contended-window ledger."""
-    import subprocess
-
-    from scripts.bench_diff import load_artifact
-
-    # the probe itself: fast, deterministic-workload, returns seconds
-    from scripts.calibrate import score
-
-    s = score(repeats=2)
-    assert 0 < s < 5.0
-
-    # artifact plumbing: load_artifact surfaces calibration when
-    # present (plain and driver-tail forms), None when absent
-    q, cal = load_artifact(FRESH)
-    assert q
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        plain = Path(td) / "plain.json"
-        plain.write_text(json.dumps({
-            "queries": {"a": 1.0},
-            "calibration_sec": {"start": 0.02, "end": 0.04},
-        }))
-        qq, cc = load_artifact(plain)
-        # min of the legs (r12): a contaminated leg only adds time
-        assert qq == {"a": 1.0} and abs(cc - 0.02) < 1e-9
-        tail = Path(td) / "tail.json"
-        tail.write_text(json.dumps({
-            "tail": 'noise {"metric": "t", "queries": {"a": 1.0}, '
-                    '"calibration_sec": {"start": 0.05, "end": 0.05}} after'
-        }))
-        qq, cc = load_artifact(tail)
-        assert qq == {"a": 1.0} and abs(cc - 0.05) < 1e-9
-
-        # end-to-end deferral: a 2x-slower host with a huge "regression"
-        # exits 3 (deferred), NOT 1 (gate fail); same regression with
-        # matching calibration exits 1
-        base_doc = {"queries": {"q_slow": 2.0, "q_a": 1.0, "q_b": 1.0,
-                                "q_c": 1.0},
-                    "calibration_sec": {"start": 0.02, "end": 0.02}}
-        for fresh_cal, expected in (({"start": 0.05, "end": 0.05}, 3),
-                                    ({"start": 0.02, "end": 0.02}, 1)):
-            fresh_doc = {"queries": {"q_slow": 8.0, "q_a": 1.0,
-                                     "q_b": 1.0, "q_c": 1.0},
-                         "calibration_sec": fresh_cal}
-            bdir = Path(td) / f"case{expected}"
-            bdir.mkdir()
-            (bdir / "scripts").mkdir()
-            (bdir / "scripts" / "bench_baseline.json").write_text(
-                json.dumps(base_doc))
-            (bdir / "BENCH_FULL.json").write_text(json.dumps(fresh_doc))
-            # run the real CLI against a scratch repo layout by copying
-            # the script (REPO paths are derived from __file__)
-            script = (bdir / "scripts" / "bench_diff.py")
-            script.write_text(
-                (REPO / "scripts" / "bench_diff.py").read_text())
-            r = subprocess.run([sys.executable, str(script)],
-                               capture_output=True, text=True)
-            assert r.returncode == expected, (
-                f"expected exit {expected}, got {r.returncode}:\n"
-                f"{r.stdout}\n{r.stderr}")
-            if expected == 3:
-                assert "DEFERRED" in r.stdout
-
-
-def test_faster_host_cannot_mask_uniform_regression():
-    """r11 review finding: a fresh run on a much-FASTER host shrinks
-    every raw time, and the median-drift divisor absorbs a UNIFORM
-    plan regression — raw ratios ~1x, median ~1x, gate silently
-    green. With calibration present, diff() floors the divisor at
-    the host-speed ratio, so the masked regression fails (exit 1).
-    A faster host with genuinely-unchanged plans must stay green."""
-    import subprocess
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        # host got 2.5x faster (cal 0.05 -> 0.02) but every query's
-        # wall time is UNCHANGED => plans uniformly ~2.5x worse
-        base_doc = {"queries": {"q_a": 2.0, "q_b": 3.0, "q_c": 4.0,
-                                "q_d": 5.0},
-                    "calibration_sec": {"start": 0.05, "end": 0.05}}
-        masked = {"queries": {"q_a": 2.0, "q_b": 3.0, "q_c": 4.0,
-                              "q_d": 5.0},
-                  "calibration_sec": {"start": 0.02, "end": 0.02}}
-        # and the healthy case: same 2.5x-faster host, times dropped
-        # in proportion => no regression, exit 0
-        healthy = {"queries": {"q_a": 0.8, "q_b": 1.2, "q_c": 1.6,
-                               "q_d": 2.0},
-                   "calibration_sec": {"start": 0.02, "end": 0.02}}
-        for tag, fresh_doc, expected in (("masked", masked, 1),
-                                         ("healthy", healthy, 0)):
-            bdir = Path(td) / tag
-            (bdir / "scripts").mkdir(parents=True)
-            (bdir / "scripts" / "bench_baseline.json").write_text(
-                json.dumps(base_doc))
-            (bdir / "BENCH_FULL.json").write_text(json.dumps(fresh_doc))
-            script = bdir / "scripts" / "bench_diff.py"
-            script.write_text(
-                (REPO / "scripts" / "bench_diff.py").read_text())
-            r = subprocess.run([sys.executable, str(script)],
-                               capture_output=True, text=True)
-            assert r.returncode == expected, (
-                f"{tag}: expected exit {expected}, got {r.returncode}:"
-                f"\n{r.stdout}\n{r.stderr}")
 
 
 def test_compact_line_bounded_with_300_flagged_queries():
@@ -249,7 +37,7 @@ def test_compact_line_bounded_with_300_flagged_queries():
     last ~2 KB of stdout — the line's HEAD (including '{"metric"') was
     cut. compact_line() must stay under COMPACT_LINE_MAX_BYTES even in
     the worst case: a 300-query registry with EVERY query flagged for
-    re-measure and a full recheck map."""
+    re-measure."""
     import bench
 
     names = [f"x{i:03d}_some_quite_long_query_name" for i in range(300)]
@@ -264,108 +52,17 @@ def test_compact_line_bounded_with_300_flagged_queries():
         "materializer": "xxhash64-all-columns",
         "sampling": "1-pass; flagged outliers = median-of-3",
         "remeasured": sorted(names),
-        "calibration_sec": {"start": 0.02, "end": 0.0198},
-        "recheck_isolated_median": timings,
-        "raw_flagged": timings,
     }
     line = bench.compact_line(full, timings)
     assert len(line.encode()) < bench.COMPACT_LINE_MAX_BYTES, len(line)
     doc = json.loads(line)
-    # the bounded stand-ins replace every unbounded name list
+    # the bounded stand-in replaces the unbounded name list
     assert doc["n_remeasured"] == 300
-    assert doc["n_rechecked"] == 300
     assert "remeasured" not in doc
-    assert "recheck_isolated_median" not in doc
-    assert "raw_flagged" not in doc
     # headline totals and per-query spine survive
     assert doc["metric"] == "total_query_time"
     assert doc["n_queries"] == 300
     assert doc["queries"]
-
-
-def test_robust_accept_damps_single_window_outliers(tmp_path, monkeypatch):
-    """r13 (VERDICT r12 items 1+3 root cause): --accept snapshotted
-    ONE window, so a lucky 1.06 s sample for a 1.6–1.9 s-band query
-    became an unachievable pinned number (t49), and an unlucky sample
-    would mask future regressions. --accept now takes the per-query
-    median of (fresh, previous baseline, latest round artifact);
-    --accept-raw keeps the verbatim copy for intentional resets."""
-    from scripts import bench_diff as bd
-
-    monkeypatch.setattr(bd, "REPO", tmp_path)
-    monkeypatch.setattr(bd, "BASELINE", tmp_path / "bench_baseline.json")
-    monkeypatch.setattr(bd, "FRESH", tmp_path / "BENCH_FULL.json")
-    (tmp_path / "bench_baseline.json").write_text(json.dumps(
-        {"queries": {"q_lucky": 1.06, "q_norm": 1.00, "q_fast": 2.0}}))
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps(
-        {"queries": {"q_lucky": 1.87, "q_norm": 1.02, "q_fast": 2.1}}))
-    (tmp_path / "BENCH_FULL.json").write_text(json.dumps(
-        {"queries": {"q_lucky": 1.95, "q_norm": 1.00, "q_fast": 0.9,
-                     "q_new": 0.5}}))
-    assert bd.main(["--accept"]) == 0
-    merged = json.loads((tmp_path / "bench_baseline.json").read_text())
-    q = merged["queries"]
-    # the stale-lucky pin moves to the honest cross-window median...
-    assert q["q_lucky"] == 1.87
-    # ...steady queries stay put...
-    assert q["q_norm"] == 1.00
-    # ...a genuine fresh improvement waits one accept (median keeps
-    # the prior band; the gate never FAILS an improvement)...
-    assert q["q_fast"] == 2.0
-    # ...and a query with no history takes its fresh number
-    assert q["q_new"] == 0.5
-    assert merged["value"] == round(sum(q.values()), 3)
-    assert "median" in merged["accept_policy"]
-    # verbatim escape hatch
-    assert bd.main(["--accept-raw"]) == 0
-    raw = json.loads((tmp_path / "bench_baseline.json").read_text())
-    assert raw["queries"]["q_lucky"] == 1.95
-
-
-def test_robust_accept_degrades_to_fresh_without_history(tmp_path,
-                                                         monkeypatch):
-    """A first-ever accept (no baseline, no round artifacts) and a
-    partial-history accept must not crash or invent numbers — entries
-    lacking a full (fresh, baseline, round) triple take the fresh
-    value verbatim."""
-    from scripts import bench_diff as bd
-
-    monkeypatch.setattr(bd, "REPO", tmp_path)
-    monkeypatch.setattr(bd, "BASELINE", tmp_path / "bench_baseline.json")
-    monkeypatch.setattr(bd, "FRESH", tmp_path / "BENCH_FULL.json")
-    (tmp_path / "BENCH_FULL.json").write_text(json.dumps(
-        {"queries": {"q": 1.5}}))
-    assert bd.main(["--accept"]) == 0
-    merged = json.loads((tmp_path / "bench_baseline.json").read_text())
-    assert merged["queries"] == {"q": 1.5}
-    # second accept: baseline exists, still no round artifact — two
-    # sources is not a triple, fresh wins again
-    (tmp_path / "BENCH_FULL.json").write_text(json.dumps(
-        {"queries": {"q": 9.9}}))
-    assert bd.main(["--accept"]) == 0
-    merged = json.loads((tmp_path / "bench_baseline.json").read_text())
-    assert merged["queries"] == {"q": 9.9}
-
-
-def test_robust_accept_survives_malformed_round_artifact(tmp_path,
-                                                         monkeypatch):
-    """r13 review: a truncated round artifact raises JSONDecodeError
-    (a ValueError) before BenchArtifactError is reachable — --accept
-    must degrade to fewer sources, not traceback at the end-of-round
-    ritual."""
-    from scripts import bench_diff as bd
-
-    monkeypatch.setattr(bd, "REPO", tmp_path)
-    monkeypatch.setattr(bd, "BASELINE", tmp_path / "bench_baseline.json")
-    monkeypatch.setattr(bd, "FRESH", tmp_path / "BENCH_FULL.json")
-    (tmp_path / "bench_baseline.json").write_text(json.dumps(
-        {"queries": {"q": 1.0}}))
-    (tmp_path / "BENCH_r07.json").write_text("truncated{{{not json")
-    (tmp_path / "BENCH_FULL.json").write_text(json.dumps(
-        {"queries": {"q": 2.0}}))
-    assert bd.main(["--accept"]) == 0
-    merged = json.loads((tmp_path / "bench_baseline.json").read_text())
-    assert merged["queries"] == {"q": 2.0}  # two sources -> fresh wins
 
 
 def test_compact_line_trim_keeps_headline_entries():
@@ -393,7 +90,6 @@ def test_compact_line_trim_keeps_headline_entries():
         "queries": timings,
         "sf": 0.1,
         "materializer": "xxhash64-all-columns",
-        "calibration_sec": {"start": 0.02, "end": 0.0198},
     }
     line = bench.compact_line(full, timings)
     assert len(line.encode()) < bench.COMPACT_LINE_MAX_BYTES
@@ -403,276 +99,3 @@ def test_compact_line_trim_keeps_headline_entries():
     )
     for n in head_present:
         assert n in doc["queries"], f"trim evicted headline entry {n}"
-
-
-def test_same_round_recovery_requires_paired_full_map(tmp_path):
-    """r13 advisor finding: _same_round_full_map trusted that the
-    commit adding BENCH_r{N}.json also carried that run's
-    BENCH_FULL.json; if the driver ever commits them separately,
-    `git show` silently serves a PREVIOUS round's full map — wrong-
-    but-parseable numbers. The recovery must verify the adding commit
-    actually touched BENCH_FULL.json and return None otherwise."""
-    import subprocess
-
-    from scripts import bench_diff
-
-    repo = tmp_path / "r"
-    repo.mkdir()
-
-    def git(*a):
-        subprocess.run(["git", "-C", str(repo), *a], check=True,
-                       capture_output=True)
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    # round 1: artifact + full map committed TOGETHER (the contract)
-    (repo / "BENCH_FULL.json").write_text(
-        json.dumps({"queries": {"q": 1.0}, "round": 1}))
-    (repo / "BENCH_r01.json").write_text("not json (truncated)")
-    git("add", "-A")
-    git("commit", "-qm", "round 1")
-    # round 2: artifact committed ALONE — full map still round 1's
-    (repo / "BENCH_r02.json").write_text("not json (truncated)")
-    git("add", "BENCH_r02.json")
-    git("commit", "-qm", "round 2 artifact only")
-    old = bench_diff.REPO
-    bench_diff.REPO = repo
-    try:
-        ok = bench_diff._same_round_full_map(repo / "BENCH_r01.json")
-        assert ok and ok["round"] == 1
-        # the unpaired artifact must NOT silently borrow round 1's map
-        assert bench_diff._same_round_full_map(
-            repo / "BENCH_r02.json") is None
-    finally:
-        bench_diff.REPO = old
-
-
-def test_truncated_round_artifact_recovers_from_committed_full_map():
-    """VERDICT r11 item 1b, live vector: BENCH_r11.json in this tree
-    IS the truncated artifact ("parsed": null, tail head-cut). The
-    loader must recover the same round's numbers from the committed
-    BENCH_FULL.json in the driver's round commit instead of dying."""
-    r11 = REPO / "BENCH_r11.json"
-    if not r11.exists():
-        pytest.skip("BENCH_r11.json not in tree")
-    doc = json.loads(r11.read_text())
-    if doc.get("parsed") is not None or "queries" in doc:
-        pytest.skip("r11 artifact is parseable here; nothing to recover")
-    queries, cal = load_artifact(r11)
-    assert len(queries) >= 250, len(queries)
-    assert cal and 0 < cal < 1.0
-    # spot-check a known r11 number survives the recovery path
-    assert "a1_miniauction_collapse" in queries
-
-
-def test_unrecoverable_artifact_raises_named_error_not_systemexit(tmp_path):
-    """An artifact with no query map AND no committed same-round
-    BENCH_FULL.json must raise BenchArtifactError (catchable, skips
-    the gate) — never SystemExit from inside a pytest run."""
-    bad = tmp_path / "BENCH_r99.json"
-    bad.write_text(json.dumps({"tail": "…head was cut…}", "parsed": None}))
-    with pytest.raises(BenchArtifactError):
-        load_artifact(bad)
-    # and a plain non-round file with no map behaves the same
-    plain = tmp_path / "not_a_round.json"
-    plain.write_text(json.dumps({"nope": 1}))
-    with pytest.raises(BenchArtifactError):
-        load_artifact(plain)
-
-
-def test_calibration_floor_covers_the_gray_zone():
-    """VERDICT r11 item 2, pinned on the r11 artifact pair: cal ratio
-    0.91x (host FASTER) while the query median drifted 1.13x (slower).
-    The old floor only engaged below cal < 1/1.3 ≈ 0.77 so a uniform
-    ~1.2–1.4x plan regression could hide in the 0.77–1.0 band. The
-    closure is TWO-part (r12): (a) the floor engages whenever the
-    combined ratio < 1.0, and (b) the JVM/shuffle leg recorded on
-    both sides makes that combined reading trustworthy — with BOTH
-    legs agreeing the host sped up, a uniform 1.40x in an r11-shaped
-    window now fails. A LONE CPU-leg reading inside its measured
-    ±17% repeatability band clamps to 1.0 instead (this round: a
-    0.85x single-leg reading manufactured three phantom regressions
-    on untouched queries whose isolated re-times matched their r11
-    numbers) — so against pre-r12 CPU-only baselines, uniform
-    regressions below ~1.5/0.83 ≈ 1.8x remain the re-baseline
-    ritual's job, and the gap retires at the next baseline refresh."""
-    from scripts.bench_diff import combined_cal_ratio
-
-    base = {f"q{i}": 2.0 for i in range(10)}
-
-    # dual-leg r11-shaped vector: both probes read 0.91x
-    base_doc = {"queries": base,
-                "calibration_sec": {"start": 0.0219, "end": 0.0219},
-                "calibration_jvm_sec": {"start": 0.20, "end": 0.20}}
-    fresh_doc = {"queries": {n: 2.0 * 1.40 for n in base},
-                 "calibration_sec": {"start": 0.0199, "end": 0.0199},
-                 "calibration_jvm_sec": {"start": 0.182, "end": 0.182}}
-    cal_ratio = combined_cal_ratio(base_doc, fresh_doc)
-    assert abs(cal_ratio - 0.91) < 0.005
-
-    # uniform 1.40x: median-only normalization masks it (by design)
-    regs, _, _ = diff(base, fresh_doc["queries"], None)
-    assert not regs, "median-only normalization masks it (by design)"
-    # ...the dual-leg floor unmasks it
-    regs, _, _ = diff(base, fresh_doc["queries"], cal_ratio)
-    assert len(regs) == 10, "dual-leg cal floor must unmask the 1.4x"
-    # the r11-observed uniform 1.13x stays green: 1.13/0.91=1.24 < 1.5
-    regs, _, _ = diff(base, {n: 2.0 * 1.13 for n in base}, cal_ratio)
-    assert not regs
-
-    # single-leg 0.91 is INSIDE probe noise -> clamps to 1.0 (inert)
-    del base_doc["calibration_jvm_sec"]
-    del fresh_doc["calibration_jvm_sec"]
-    assert combined_cal_ratio(base_doc, fresh_doc) == 1.0
-    # a single-leg reading BEYOND the band still floors (old 0.77 case)
-    fresh_doc["calibration_sec"] = {"start": 0.0164, "end": 0.0164}
-    r = combined_cal_ratio(base_doc, fresh_doc)
-    assert r < 0.8
-    regs, _, _ = diff(base, fresh_doc["queries"], r)
-    assert len(regs) == 10
-
-
-def test_combined_cal_ratio_takes_the_pessimistic_leg():
-    """r12 (VERDICT r11 item 2 second half): the CPU-only probe can
-    SPLIT from query drift when contention is JVM/IO-side — r11's
-    artifact measured the probe 0.91x (faster) while queries ran
-    1.13x slower. With the JVM/shuffle leg recorded on both sides,
-    the effective ratio is the MAX of the legs: the faster-host floor
-    only engages when every leg agrees, and deferral triggers when
-    any leg saw the slowdown."""
-    base = {"queries": {"q": 1.0},
-            "calibration_sec": {"start": 0.02, "end": 0.02},
-            "calibration_jvm_sec": {"start": 0.40, "end": 0.40}}
-    # the r11 split, as it would have recorded with both legs
-    fresh = {"queries": {"q": 1.13},
-             "calibration_sec": {"start": 0.0182, "end": 0.0182},
-             "calibration_jvm_sec": {"start": 0.452, "end": 0.452}}
-    r = combined_cal_ratio(base, fresh)
-    assert abs(r - 1.13) < 0.01  # jvm leg (1.13) beats cpu leg (0.91)
-    # cpu-only artifacts (pre-r12 baselines) fall back to the cpu leg
-    # — and a lone sub-1.0 reading inside the probe-noise band clamps
-    # to 1.0 (r12: below single-probe resolution)
-    del base["calibration_jvm_sec"]
-    assert combined_cal_ratio(base, fresh) == 1.0
-    # no calibration at all -> None
-    assert combined_cal_ratio({"queries": {}}, {"queries": {}}) is None
-
-
-def test_default_gate_skips_on_corrupt_artifacts(tmp_path):
-    """r12 review finding: only the --since branch caught
-    BenchArtifactError; a corrupt pinned baseline or a truncated
-    fresh BENCH_FULL.json made the DEFAULT gate exit 1 via an
-    unhandled traceback — indistinguishable from a real gate failure.
-    Both now exit 2 ('artifact problem') with a named message."""
-    import subprocess
-
-    good = json.dumps({"queries": {"a": 1.0},
-                       "calibration_sec": {"start": 0.02, "end": 0.02}})
-    bad = json.dumps({"tail": "…head cut…}", "parsed": None})
-    for which in ("baseline", "fresh"):
-        bdir = tmp_path / which
-        (bdir / "scripts").mkdir(parents=True)
-        (bdir / "scripts" / "bench_baseline.json").write_text(
-            bad if which == "baseline" else good)
-        (bdir / "BENCH_FULL.json").write_text(
-            good if which == "baseline" else bad)
-        script = bdir / "scripts" / "bench_diff.py"
-        script.write_text((REPO / "scripts" / "bench_diff.py").read_text())
-        r = subprocess.run([sys.executable, str(script)],
-                           capture_output=True, text=True)
-        assert r.returncode == 2, (which, r.returncode, r.stdout, r.stderr)
-        assert "GATE SKIPPED" in r.stdout
-
-
-def test_contaminated_probe_leg_does_not_shift_host_score():
-    """r12 review finding: the start probe leg can sample the PREVIOUS
-    Spark JVM's shutdown (observed: 0.21 s vs a 0.017 s clean end leg)
-    and a mean would record a 6x phantom-slow host — poisoning every
-    future faster-host floor computed against that baseline. The host
-    score is the MIN of the legs: contamination only ever adds time."""
-    doc = {"queries": {"a": 1.0},
-           "calibration_sec": {"start": 0.2118, "end": 0.0168}}
-    clean = {"queries": {"a": 1.0},
-             "calibration_sec": {"start": 0.017, "end": 0.0165}}
-    r = combined_cal_ratio(doc, clean)
-    assert 0.9 < r < 1.1, r  # NOT the ~0.08x a mean would produce
-
-
-def test_deferral_keys_off_worst_fresh_window():
-    """r12 second review pass: min-of-legs fixed baseline poisoning
-    but silently disabled deferral for a run whose contention subsided
-    before the end probe — start leg 2.5x slow (first half of the
-    queries ran inside the burst), end leg clean, min() reads the host
-    as fine and the gate fails environment-slowed queries as plan
-    regressions. Deferral now keys off the fresh run's WORST leg."""
-    from scripts.bench_diff import PROBE_NOISE_BAND
-
-    base = {"queries": {"q": 1.0},
-            "calibration_sec": {"start": 0.02, "end": 0.02}}
-    fresh = {"queries": {"q": 2.0},
-             "calibration_sec": {"start": 0.05, "end": 0.02}}
-    # capability ratio: min legs -> 1.0 (floor stays inert)
-    assert combined_cal_ratio(base, fresh) == 1.0
-    # deferral ratio: worst fresh leg vs base capability (2.5x raw),
-    # deflated by one probe noise band (r13 advisor fix)
-    assert abs(deferral_cal_ratio(base, fresh) - 2.5 * PROBE_NOISE_BAND) < 1e-9
-
-
-def test_core_count_mismatch_defers_not_fails(tmp_path):
-    """r15 inherited state: the r14 driver commit overwrote
-    BENCH_FULL.json with the 8-CORE scaling run's full map; against the
-    32-core pinned baseline the gate read the core-scaling mapInPandas
-    queries (x135/x136) as unwaived 1.7–2.2x plan regressions. With
-    both artifacts carrying "cpus", a mismatch must DEFER (exit 3),
-    not fail; matching counts and legacy cpus-less artifacts keep the
-    normal adjudication path."""
-    import subprocess
-
-    assert cpus_mismatch({"cpus": 32}, {"cpus": 8}) == (32, 8)
-    assert cpus_mismatch({"cpus": 32}, {"cpus": 32}) is None
-    assert cpus_mismatch({}, {"cpus": 8}) is None  # pre-r15 baseline
-
-    base_doc = {"queries": {"q_slow": 2.0, "q_a": 1.0, "q_b": 1.0,
-                            "q_c": 1.0},
-                "cpus": 32,
-                "calibration_sec": {"start": 0.02, "end": 0.02}}
-    fresh_doc = {"queries": {"q_slow": 8.0, "q_a": 1.0, "q_b": 1.0,
-                             "q_c": 1.0},
-                 "cpus": 8,
-                 "calibration_sec": {"start": 0.02, "end": 0.02}}
-    bdir = tmp_path / "mm"
-    (bdir / "scripts").mkdir(parents=True)
-    (bdir / "scripts" / "bench_baseline.json").write_text(
-        json.dumps(base_doc))
-    (bdir / "BENCH_FULL.json").write_text(json.dumps(fresh_doc))
-    script = bdir / "scripts" / "bench_diff.py"
-    script.write_text((REPO / "scripts" / "bench_diff.py").read_text())
-    r = subprocess.run([sys.executable, str(script)],
-                       capture_output=True, text=True)
-    assert r.returncode == 3, (r.returncode, r.stdout, r.stderr)
-    assert "core-count mismatch" in r.stdout
-
-
-def test_deferral_not_armed_by_probe_jitter():
-    """r13 advisor finding: worst-vs-min pairs extreme picks on both
-    sides, so the probe's own measured ±17% single-leg repeatability
-    (clean-idle scores 0.0168–0.023 s = a 1.37x spread) could alone
-    exceed CAL_DRIFT_MAX=1.3 — converting any real unwaived regression
-    into a repeatable defer. With the noise-band deflation a clean
-    window at the probe's own worst measured spread must NOT defer,
-    while a genuinely contended window (the r12 driver run's 1.85x)
-    still must."""
-    from scripts.bench_diff import CAL_DRIFT_MAX
-
-    base = {"queries": {"q": 1.0},
-            "calibration_sec": {"start": 0.0168, "end": 0.0170}}
-    # clean window, legs spanning the probe's full measured band
-    jitter = {"queries": {"q": 1.0},
-              "calibration_sec": {"start": 0.0230, "end": 0.0168}}
-    assert deferral_cal_ratio(base, jitter) <= CAL_DRIFT_MAX
-    # genuinely contended window (r12 driver artifact's 1.85x)
-    contended = {"queries": {"q": 1.0},
-                 "calibration_sec": {"start": 0.0168 * 1.85,
-                                     "end": 0.0168}}
-    assert deferral_cal_ratio(base, contended) > CAL_DRIFT_MAX
