@@ -21,9 +21,10 @@ mapping each NATS subject to the function of the same shape:
 
 All functions return lazy DataFrames — the serving layer decides how
 to materialize (collect for a reply payload, write for an export).
-Every subject is a filter, sort or page over ONE of the per-session
-snapshots :func:`views` returns (the analog of the reference serving
-from its in-process Bolt snapshots). Two kinds of snapshot back them:
+Every subject is a filter, sort, page or keyed pick over ONE of the
+per-session snapshots :func:`views` returns (the analog of the
+reference serving from its in-process Bolt snapshots). Three kinds of
+snapshot back them:
 
 * the raw auctions and the events' (user_id, ts, value) are table-
   sized, so ``serving_gate.warm_cache`` caches them in memory, one
@@ -31,16 +32,22 @@ from its in-process Bolt snapshots). Two kinds of snapshot back them:
   only the in-memory batches whose min/max statistics can match it.
   The auctions and price-list-history subjects aggregate per request
   over them.
-* every other view is collected once per session into a driver-held
-  LocalRelation, already sorted in reply order: one row per realm
-  (realms, mod_dates), per (region, day) (tokens), per owner (owners)
-  and per part (min_owner, prices; 200k × sf rows). Six subjects
-  have small replies fixed by their parameters, so a request over
-  one is only filter / project / limit, which the optimizer folds
-  into a LocalTableScan (ConvertToLocalRelation): the reply runs no
-  Spark job. A request-time ``orderBy`` would undo that (it plans a
-  range-partition sort), so these subjects never sort. The
-  items-query subject ranks the per-part view per request.
+* the small views are collected once per session into driver-held
+  LocalRelations, already sorted in reply order: one row per realm
+  (realms, mod_dates), per (region, day) (tokens) and per owner
+  (owners). Four subjects have small replies fixed by their
+  parameters, so a request over one is only filter / project /
+  limit, which the optimizer folds into a LocalTableScan
+  (ConvertToLocalRelation): the reply runs no Spark job. A
+  request-time ``orderBy`` would undo that (it plans a
+  range-partition sort), so these subjects never sort.
+* the two per-part views (min_owner, prices; 200k × sf rows) are
+  keyed: collected the same way, and kept with their JVM rows and a
+  driver-side array of their key, in the view's order. The
+  unmet-demand and price-list subjects find their reply's positions
+  in that array and build a LocalRelation of exactly those rows, so
+  they too run no job, and no filter is folded over the whole view.
+  The items-query subject ranks the min_owner view per request.
 
 A reply that runs a job runs one job of one stage with no Exchange.
 
@@ -51,7 +58,9 @@ guarantees.
 from __future__ import annotations
 
 import threading
+from bisect import bisect_left
 from dataclasses import dataclass, field
+from itertools import islice
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,17 +75,60 @@ def _snapshot(df: DataFrame, *keys) -> DataFrame:
     return df.repartition(1).sortWithinPartitions(*keys)
 
 
-def _local(df: DataFrame) -> DataFrame:
-    """``df``'s rows, in ``df``'s order, as a driver-held LocalRelation.
-    The rows go from the collect straight into the relation on the JVM
-    side: none crosses py4j, and the relation is not a Python RDD (a
+def _local_rows(rows, schema, spark: SparkSession) -> DataFrame:
+    """``rows`` (a JVM ``java.util.List<Row>`` of ``schema``) as a
+    driver-held LocalRelation, built on the JVM side: no row crosses
+    py4j, and the relation is not a Python RDD (a
     ``spark.createDataFrame`` of Python rows is one, and every request
     over it runs jobs)."""
-    spark = df.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(
-        df._jdf.collectAsList(), df._jdf.schema()
-    )
-    return DataFrame(jdf, spark)
+    return DataFrame(spark._jsparkSession.createDataFrame(rows, schema), spark)
+
+
+def _local(df: DataFrame) -> DataFrame:
+    """``df``'s rows, in ``df``'s order, as a driver-held LocalRelation."""
+    return _local_rows(df._jdf.collectAsList(), df._jdf.schema(), df.sparkSession)
+
+
+class _Keyed:
+    """A per-part view kept for keyed picks: its rows, collected once
+    into a JVM list and into a driver-held LocalRelation (``df``), and
+    a driver-side array of its ``key`` column in the same order. A
+    request finds its reply's positions in ``keys`` and takes just
+    those rows with :meth:`pick`, so its cost follows the reply, not
+    the view. ``drop_key`` leaves the key out of the rows, for a key
+    that is in no reply."""
+
+    def __init__(self, df: DataFrame, key: str, drop_key: bool = False):
+        self.spark = df.sparkSession
+        full = _local(df)
+        # a LocalTableScan collects on the driver: neither of the two
+        # collects below runs a job
+        self.keys = [r[0] for r in full.select(key).collect()]
+        view = full.drop(key) if drop_key else full
+        self.schema = view._jdf.schema()
+        self.rows = view._jdf.collectAsList()
+        self.df = _local_rows(self.rows, self.schema, self.spark)
+        jvm = self.spark._jvm
+        scala = jvm.scala.jdk.javaapi.CollectionConverters
+        # each JVM member below is looked up once, as every lookup is a
+        # py4j round trip; the rows as a Scala Seq are a function
+        # position -> row
+        self._row_at = scala.asScala(self.rows)
+        self._as_java = scala.asJava
+        self._bitset = jvm.java.util.BitSet.valueOf
+        self._int_seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
+
+    def pick(self, positions) -> DataFrame:
+        """The rows at the distinct ``positions``, in the view's order,
+        as a LocalRelation of exactly those rows. The positions cross
+        py4j as one bitmask and the rows are gathered on the JVM side,
+        so a pick takes the same few py4j calls at any reply size."""
+        mask = sum(1 << p for p in positions)
+        at = self._bitset(
+            mask.to_bytes((mask.bit_length() + 7) // 8, "little")
+        ).stream().toArray()
+        picked = self._as_java(self._int_seq(at).map(self._row_at))
+        return _local_rows(picked, self.schema, self.spark)
 
 
 def _realm_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,12 +173,15 @@ def _mod_dates(v: Views) -> DataFrame:
     return _local(_snapshot(dates, "region_name", "realm_id"))
 
 
-def _min_owner(v: Views) -> DataFrame:
+def _min_owner(v: Views) -> _Keyed:
     part = tables.load(v.spark, v.sf_dir, "part").select(
         F.col("p_partkey").alias("item"), F.col("p_name").alias("item_name")
     )
     least = v.auctions.groupBy("item").agg(F.min("owner").alias("_min_owner"))
-    return _local(_snapshot(part.join(least, "item", "left"), "item"))
+    return _Keyed(
+        _snapshot(part.join(least, "item", "left"), "item"), "_min_owner",
+        drop_key=True,
+    )
 
 
 def _owners(v: Views) -> DataFrame:
@@ -147,7 +202,8 @@ def _tokens(v: Views) -> DataFrame:
 
 # name -> builder of each view. auctions and events are table-sized
 # snapshots that warm_cache caches; every other view is a driver-held
-# LocalRelation, collected when it is built and sorted in reply order.
+# LocalRelation, collected when it is built and sorted in reply order,
+# and the two per-part views are kept with their key array (_Keyed).
 # owners, min_owner and prices read the auctions view; every other
 # view reads only the tables.
 _BUILDERS = {
@@ -165,10 +221,13 @@ _BUILDERS = {
     "tokens": _tokens,
     # distinct owners, by the length of their rendering, then owner
     "owners": _owners,
-    # every part's (item, item_name, _min_owner), by item
+    # every part's (item, item_name), by item; keyed by the part's
+    # smallest live owner (null: no auction)
     "min_owner": _min_owner,
-    # A2 price_stats of every item, by item
-    "prices": lambda v: _local(_snapshot(ops.price_stats(v.auctions), "item")),
+    # A2 price_stats of every item, by item; keyed by item
+    "prices": lambda v: _Keyed(
+        _snapshot(ops.price_stats(v.auctions), "item"), "item"
+    ),
 }
 
 
@@ -178,7 +237,8 @@ class Views:
     first use, once: a driver-held view is collected then, a cached
     view stays lazy until ``serving_gate.warm_cache`` caches it.
     Building on first use lets ``warm_cache`` collect one view while
-    it caches another."""
+    it caches another. A keyed view's index is held beside its
+    DataFrame, and :meth:`keyed` returns it."""
 
     names = tuple(_BUILDERS)
     cached = ("auctions", "events")  # the views warm_cache caches
@@ -187,14 +247,23 @@ class Views:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark, self.sf_dir = spark, sf_dir
         self._locks = {name: threading.Lock() for name in self.names}
+        self._keyed: dict[str, _Keyed] = {}
 
     def __getattr__(self, name: str) -> DataFrame:
         if name not in _BUILDERS:
             raise AttributeError(name)
         with self._locks[name]:
             if name not in self.__dict__:
-                self.__dict__[name] = _BUILDERS[name](self)
+                view = _BUILDERS[name](self)
+                if isinstance(view, _Keyed):
+                    self._keyed[name], view = view, view.df
+                self.__dict__[name] = view
         return self.__dict__[name]
+
+    def keyed(self, name: str) -> _Keyed:
+        """The index of the keyed view ``name``, built with it."""
+        getattr(self, name)
+        return self._keyed[name]
 
 
 _VIEWS_ATTR = "_server_spark_api_views"
@@ -274,8 +343,15 @@ def price_list(
     """Per-item price stats for a requested item set (A2 behind the
     price-list subject): the requested items' rows of the per-item
     stats, which are exact per item, so computing them once for every
-    item answers any item set."""
-    return ops.filter_by_items(views(spark, sf_dir).prices, item_ids)
+    item answers any item set. Each distinct requested id is bisected
+    in the item-ordered view; an id with no auctions has no row."""
+    prices = views(spark, sf_dir).keyed("prices")
+    keys, hits = prices.keys, []
+    for item in set(item_ids):
+        p = bisect_left(keys, item)
+        if p < len(keys) and keys[p] == item:
+            hits.append(p)
+    return prices.pick(hits)
 
 
 def price_list_history(
@@ -394,10 +470,8 @@ def unmet_demand_list(
     exactly when it has no auction or its smallest owner exceeds the
     cap — J5's anti join, since a null owner never satisfies
     ``owner <= cap``."""
-    m = F.col("_min_owner")
-    return (
-        views(spark, sf_dir).min_owner
-        .filter(m.isNull() | (m > owner_cap))
-        .select("item", "item_name")
-        .limit(limit)
+    min_owner = views(spark, sf_dir).keyed("min_owner")
+    unmet = (
+        p for p, m in enumerate(min_owner.keys) if m is None or m > owner_cap
     )
+    return min_owner.pick(islice(unmet, limit))

@@ -103,24 +103,30 @@ def barrier(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def lazy_barrier(df: DataFrame) -> DataFrame:
-    """``barrier(df, eager=False)`` — lineage cut + single shared RDD
-    NOW, materialization deferred to the next action.
+    """``barrier(df, eager=False)``: the lineage cut and one shared
+    RDD now, with the final stage left to the next action.
 
-    r15 job-count pass (guide §5): an EAGER barrier adds a serial job
-    per call purely to materialize before the consumers run. What the
-    query paths actually need from barrier() is (a) the lineage cut
-    (LogicalRDD — plans stay shallow, Catalyst can't re-inline a
-    lambda-bearing projection per reference) and (b) ONE shared RDD so
-    multi-consumer subtrees compute once and AQE/partition-id
+    It is not free of jobs under AQE. Building the lazy checkpoint
+    plans ``df`` adaptively, and adaptive planning runs every shuffle
+    stage below the barrier at once; only the stage that writes the
+    checkpoint waits for the next action. Counted on a 10k-row
+    ``spark.range`` (local[4]), the jobs a lazy barrier runs before
+    any action are: 1 over one aggregate, 3 over a join of two
+    aggregates, 2 over a ``repartitionByRange``. With
+    ``spark.sql.adaptive.enabled=false`` they are 0, 1 and 1: the
+    aggregate waits, but the join's broadcast build and the range
+    partitioner's bounds sample still run at once.
+
+    What the query paths need from barrier() is (a) the lineage cut
+    (LogicalRDD: plans stay shallow, and Catalyst cannot re-inline a
+    lambda-bearing projection per reference) and (b) ONE shared RDD,
+    so multi-consumer subtrees compute once and AQE/partition-id
     decisions are pinned to a single physical-plan instance. A lazy
-    checkpoint provides both — the RDD is created immediately, its
-    partition structure is fixed, the first action materializes and
-    caches it, and size estimates for join planning are preserved
+    checkpoint gives both without the eager form's extra job for the
+    final stage; size estimates for join planning are preserved
     (probed: identical sizeInBytes and BroadcastHashJoin selection
-    either way). Iterative kernels whose convergence probe collect()s
-    each round get the same blocks one job earlier than eager would.
-    Eager remains available for call sites that need materialization
-    as a side effect BEFORE a non-Spark decision."""
+    either way). Eager remains available for call sites that need
+    materialization as a side effect BEFORE a non-Spark decision."""
     return barrier(df, eager=False)
 
 

@@ -480,6 +480,17 @@ _MANIFEST_SCHEMA = (
 )
 
 
+def _json_rows(spark: SparkSession, rows: list[dict], schema: str) -> DataFrame:
+    """``rows`` as a one-partition relation of the DDL ``schema``,
+    built on the JVM side from one JSON literal. A
+    ``spark.createDataFrame`` of Python rows is a Python RDD, so
+    writing it runs a task per core through Python workers; this runs
+    one task and no Python worker."""
+    return spark.range(1, numPartitions=1).select(F.inline(F.from_json(
+        F.lit(json.dumps(rows)), f"array<struct<{schema}>>"
+    )))
+
+
 def _write_partitioned(df: DataFrame, path: str, mode: str) -> None:
     """The one medallion table write. The shuffle on the partition
     columns puts each (region, realm_slug, dump_date) partition's rows
@@ -573,7 +584,7 @@ def load_manifest(spark: SparkSession, paths: MedallionPaths) -> DataFrame:
     (r11 review finding). The schema is given, so reading it runs no
     inference job; files from before versioning read batch_id 0."""
     if not _table_has_data(paths, paths.manifest):
-        return spark.createDataFrame([], _MANIFEST_SCHEMA)
+        return _json_rows(spark, [], _MANIFEST_SCHEMA)
     m = spark.read.schema(_MANIFEST_SCHEMA).parquet(paths.manifest)
     return m.withColumn("batch_id", F.coalesce("batch_id", F.lit(0).cast("long")))
 
@@ -695,8 +706,10 @@ def _ingest_bronze_locked(
             "idempotently. For multi-host writers deploy a real commit "
             "protocol (Delta/Iceberg or a conditional-PUT LogStore)."
         )
-    spark.createDataFrame(
-        [k[:4] for k in new],
+    _json_rows(
+        spark,
+        [{"region": k.region, "realm_slug": k.realm_slug, "ts_us": k.ts_us,
+          "n_rows": k.n_rows} for k in new],
         "region string, realm_slug string, ts_us long, n_rows long",
     ).select(
         "region", "realm_slug", F.timestamp_micros("ts_us").alias("dump_ts"),

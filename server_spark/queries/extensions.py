@@ -8,8 +8,8 @@ split by family:
 - ext_pipeline:   x17/x18/x19/x20/x28/x31/x12/x13/f3b
 
 Importing this module registers every EXT query (the registry's
-_ensure_loaded imports it). Driver-facing order is pinned by
-registry.DRIVER_WINDOW, not by import order. Re-exports below keep
+_ensure_loaded imports the five family modules itself). Driver-facing
+order is pinned by registry.DRIVER_WINDOW, not by import order. Re-exports below keep
 the historical ``queries.extensions`` import surface working.
 """
 

@@ -132,21 +132,32 @@ DRIVER_WINDOW: tuple[str, ...] = (
 )
 
 
-def _ordered() -> list[Query]:
-    qs = list(REGISTRY.values())
-    idx = {q.name: i for i, q in enumerate(qs)}
-    win = {name: i for i, name in enumerate(DRIVER_WINDOW)}
+# The modules that register queries, in the order _ensure_loaded
+# imports them. Past the driver window, queries sort by their module's
+# place here and then by their definition line, so the order is the
+# tree's, whichever module a process happened to import first.
+_MODULES: tuple[str, ...] = (
+    "codecs", "core", "ext_analytics", "ext_dedup", "ext_pipeline",
+    "ext_similarity", "ext_text", "functions_q", "joins_sets", "nested",
+    "timeseries", "warehouse",
+)
+_PACKAGE = "server_spark.queries"
 
-    def key(q: Query) -> tuple[int, int]:
+
+def _ordered() -> list[Query]:
+    win = {name: i for i, name in enumerate(DRIVER_WINDOW)}
+    rank = {f"{_PACKAGE}.{m}": i for i, m in enumerate(_MODULES)}
+
+    def key(q: Query) -> tuple:
         if q.name in win:
             return (0, win[q.name])
-        if q.oracle and not q.late:
-            return (1, idx[q.name])
-        if q.oracle:
-            return (2, idx[q.name])
-        return (3, idx[q.name])
+        tier = (1 if not q.late else 2) if q.oracle else 3
+        return (
+            tier, rank.get(q.fn.__module__, len(_MODULES)), q.fn.__module__,
+            q.fn.__code__.co_firstlineno, q.name,
+        )
 
-    return sorted(qs, key=key)
+    return sorted(REGISTRY.values(), key=key)
 
 
 def auctions_sql(body: str) -> str:
@@ -185,15 +196,9 @@ def _ensure_loaded() -> None:
     if _LOADED:
         return
     # Imports deferred to avoid import cycles at package import time.
-    from server_spark.queries import (  # noqa: F401
-        codecs,
-        core,
-        extensions,
-        functions_q,
-        joins_sets,
-        nested,
-        timeseries,
-        warehouse,
-    )
+    import importlib
+
+    for module in _MODULES:
+        importlib.import_module(f"{_PACKAGE}.{module}")
 
     _LOADED = True

@@ -22,14 +22,19 @@ def warm_cache(spark, sf_dir) -> None:
     assembles its view on first use, so one view's DataFrame assembly
     overlaps another's job. Then, side by side, the three views read
     from the cached auctions are collected: the distinct owners,
-    every part's smallest owner and every item's price stats.
+    every part's smallest owner and every item's price stats. The
+    last two are keyed: their index (the JVM row list and the key
+    array) is built from that same collect, with no further job.
 
     Size bound: each cached view is one partition of at most its
     source table's rows, so the cache holds the seven auction columns
     of every lineitem row and three columns of every event. The
     driver holds one row per realm (realms, mod_dates; 25), per
     (region, day) (tokens), per owner (owners; at most the supplier
-    table's 10k × sf) and per part (min_owner, prices; 200k × sf)."""
+    table's 10k × sf) and per part (min_owner, prices; 200k × sf).
+    Each keyed view also holds its rows once more as a JVM
+    ``java.util.List<Row>`` and its key as a Python list, each of at
+    most 200k × sf entries."""
     from concurrent.futures import ThreadPoolExecutor
 
     from server_spark import api

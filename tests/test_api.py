@@ -483,6 +483,18 @@ def _same_rows(got, want) -> bool:
 @example(owner_cap=-1, limit=120, items=[1, 2], region="ATLANTIS",
          owner_query="")
 @example(owner_cap=-1, limit=5, items=[3], region=None, owner_query="1")
+# duplicate ids, and ids no part has
+@example(owner_cap=3, limit=7, items=[5, 5, 0, 2100, 10**6], region="ASIA",
+         owner_query="9")
+# every item unmet
+@example(owner_cap=-1, limit=30, items=[1999], region="EUROPE",
+         owner_query="")
+# a limit above the number of unmet items (20 at sf0.01)
+@example(owner_cap=15, limit=120, items=[7], region="AMERICA",
+         owner_query="2")
+# empty replies: no item unmet, no requested id priced
+@example(owner_cap=40, limit=10, items=[2100, 10**6], region="ATLANTIS",
+         owner_query="x")
 @_PROP_SETTINGS
 def test_views_match_per_request_compositions(
     spark, served, owner_cap, limit, items, region, owner_query
@@ -559,6 +571,29 @@ def test_views_match_per_request_compositions(
     if region == "ATLANTIS":
         assert not got.collect()
         assert not api.realm_status(spark, sf, region).collect()
+
+
+def test_keyed_subjects_hold_exactly_their_reply(spark, served):
+    """price_list and unmet_demand_list fold no filter over their
+    per-part view: each request's analyzed plan is one LocalRelation
+    holding exactly the reply's rows, picked from the view's index."""
+    requests = {
+        "price_list": api.price_list(spark, SF_SERVED, (1, 21, 21, 34, 2100)),
+        "price_list_absent": api.price_list(spark, SF_SERVED, (-1, 10**6)),
+        "unmet_demand_list": api.unmet_demand_list(
+            spark, SF_SERVED, owner_cap=4, limit=40),
+        "unmet_all": api.unmet_demand_list(spark, SF_SERVED, owner_cap=-1),
+    }
+    sizes = {}
+    for name, df in requests.items():
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.nodeName() == "LocalRelation", name
+        sizes[name] = plan.data().size()
+        assert sizes[name] == len(df.collect()), name
+    assert sizes == {
+        "price_list": 3, "price_list_absent": 0,
+        "unmet_demand_list": 40, "unmet_all": 100,
+    }
 
 
 def test_only_table_sized_views_are_cached(spark, served):

@@ -673,6 +673,13 @@ def test_delivery_job_budget(spark, tmp_path):
     deliver("first", dump(t0, 1), 0)
     later = dump(t0 + dt.timedelta(hours=1), 2)
     assert deliver("fresh", later, 1) == {"ingest": 8, "silver": 5, "gold": 5}
+    # the ingest's last job is the manifest append: one task, as the
+    # new keys are one JVM-built partition, not a Python RDD
+    append = max(tracker.getJobIdsForGroup("test_medallion.budget.fresh.ingest"))
+    assert [
+        tracker.getStageInfo(s).numTasks
+        for s in tracker.getJobInfo(append).stageIds
+    ] == [1]
     assert deliver("again", later, 2) == {"ingest": 2, "silver": 1, "gold": 1}
 
 

@@ -97,3 +97,29 @@ def test_in_package_imports_resolve():
                 except ImportError:
                     missing.append(f"{where}: {module}.{name}")
     assert not missing, "unresolved in-package imports:\n" + "\n".join(missing)
+
+
+def test_order_is_independent_of_import_history():
+    """A process that imports a late query module before its first
+    ``queries()`` call gets this process's order: past the driver
+    window, queries sort by their module's place in the registry's
+    import list and their definition line, not by which module was
+    imported first."""
+    import json
+    import subprocess
+    import sys
+
+    registry._ensure_loaded()
+    listed = {f"{registry._PACKAGE}.{m}" for m in registry._MODULES}
+    assert {q.fn.__module__ for q in registry.REGISTRY.values()} <= listed
+    code = (
+        "import json, server_spark.queries.warehouse\n"
+        "from server_spark import registry\n"
+        "print(json.dumps(list(registry.queries())))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(registry.__file__).resolve().parents[1], timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert json.loads(out.stdout.splitlines()[-1]) == _ordered_names()
