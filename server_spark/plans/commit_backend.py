@@ -13,11 +13,11 @@ machinery becomes multi-driver safe on a bucket without touching any
 caller.
 
 The protocol is deliberately the object-store wire surface and
-nothing more — five verbs every store has:
+nothing more — six verbs every store has:
 
 - ``put_if_absent(path, payload) -> bool`` — atomic create; False iff
   the object already existed (the ONLY correctness-bearing verb).
-- ``put(path, payload)`` — unconditional overwrite (lock heartbeats).
+- ``put(path, payload)`` — unconditional overwrite.
 - ``read(path) -> bytes | None`` — GET (lock ownership checks).
 - ``list_names(prefix) -> iterable[str]`` — relative keys under a
   prefix, recursive, MAY BE LAZY (claims listing, manifest
@@ -25,41 +25,26 @@ nothing more — five verbs every store has:
   never-written probe stops at the first real data key — a backend
   that materializes the whole listing turns an O(1) existence probe
   into a full-tree walk on every ingest).
-- ``delete(path)`` — idempotent DELETE (claim pruning, lock release).
-
-Three OPTIONAL verbs (absent ones degrade to documented fallbacks):
-``io_path(path) -> str`` translates a logical key to the URL Spark's
-Hadoop connector reads/writes (identity when absent — on a real
-bucket the key IS the URL; a test backend maps ``s3://bucket/...`` onto a
-local directory so the versioned-table protocol runs end-to-end
-without credentials); ``object_size(path) -> int | None`` surfaces
-the byte size object-store LIST responses carry anyway (compaction
-sizing; absent sizes, file count alone decides); and
-``replace_if_match(path, payload, expected) ->
-bool`` — atomic compare-and-swap, True iff the object's current
-payload equalled ``expected`` and was replaced (S3 ``If-Match`` etag
-/ GCS ``if-generation-match`` conditional PUT; the local analog
-compares by value under a per-key advisory lock that unconditional
-``put`` also takes — see ``_key_guard``). When a backend provides
-it, every commit-lock transition becomes conditional on exact prior
-bytes: stale BREAK (one of N racing breakers wins), HEARTBEAT (a
-delayed beat can't overwrite a thief), and RELEASE (tombstone swap
-instead of delete) — closing the read-check-then-write residuals;
-backends without the verb keep the documented best-effort forms.
-The verb also carries the versioned-table pointer swap
-(``plans.versioned_table``): compaction/layout rewrites publish a
-new immutable data generation and CAS the table's current-version
-pointer, which is how layout maintenance works on a bucket at all.
+- ``delete(path)`` — idempotent DELETE (claim pruning).
+- ``replace_if_match(path, payload, expected) -> bool`` — atomic
+  compare-and-swap, True iff the object's current payload equalled
+  ``expected`` and was replaced (S3 ``If-Match`` etag / GCS
+  ``if-generation-match`` conditional PUT; the local analog compares
+  by value under a per-key advisory lock that unconditional ``put``
+  also takes — see ``_key_guard``). Every backend commit-lock
+  transition but the claim of an absent key is this verb, conditional
+  on exact prior bytes: stale BREAK (one of N racing breakers wins),
+  HEARTBEAT (a delayed beat can't overwrite a thief), and RELEASE (a
+  tombstone swap instead of a delete). Claims alone never need it: an
+  explicit ``MedallionPaths(backend=...)`` without it still mints
+  batch ids, but the env hook and the lock refuse it
+  (``require_verbs``).
 
 NOT in the protocol: rename, mtime, directory semantics. Those are
 POSIX-isms the backend-routed machinery must not rely on — the
 two-rename swap layer in ``plans.maintenance`` therefore stays
 LOCAL-FS ONLY and rejects URI roots loudly rather than pretending a
-bucket can rename. The object-store answer for compaction / Z-order
-/ table swap is ``plans.versioned_table`` (r14): immutable data
-generations plus a current-version pointer swapped via the CAS verb
-— rename-free by construction, so it routes through this protocol
-on any root.
+bucket can rename.
 """
 
 from __future__ import annotations
@@ -214,17 +199,9 @@ class LocalFSBackend:
         except FileNotFoundError:
             pass
 
-    def object_size(self, path: str) -> int | None:
-        """Optional sizing verb (see module docstring) — a real
-        object store reads this off its LIST page for free."""
-        try:
-            return os.path.getsize(path)
-        except OSError:
-            return None
-
     def replace_if_match(self, path: str, payload: bytes,
                          expected: bytes) -> bool:
-        """Optional CAS verb (see module docstring). POSIX cannot
+        """The CAS verb (see module docstring). POSIX cannot
         compare-and-swap a file's content atomically, so all
         conditional-sensitive writers of one key — CAS AND
         unconditional put, see ``_key_guard`` — serialize on a
@@ -273,14 +250,26 @@ def injected_backend():
         raise ImportError(
             f"SPARK_GRAFT_COMMIT_BACKEND={spec!r} failed to load: {exc}"
         ) from exc
-    for verb in ("put_if_absent", "put", "read", "list_names", "delete"):
-        if not callable(getattr(backend, verb, None)):
-            raise TypeError(
-                f"SPARK_GRAFT_COMMIT_BACKEND={spec!r} resolved to "
-                f"{type(backend).__name__} missing verb {verb!r}"
-            )
+    require_verbs(backend, f"SPARK_GRAFT_COMMIT_BACKEND={spec!r}")
     injected_backend._cache = (spec, backend)
     return backend
+
+
+_VERBS = ("put_if_absent", "put", "read", "list_names", "delete",
+         "replace_if_match")
+
+
+def require_verbs(backend, what: str) -> None:
+    """Raise TypeError naming the first protocol verb ``backend``
+    lacks. The env hook checks at resolution and the backend lock
+    before it writes anything, so a CAS-less backend is refused
+    loudly instead of holding a lock it cannot break or release."""
+    for verb in _VERBS:
+        if not callable(getattr(backend, verb, None)):
+            raise TypeError(
+                f"{what}: {type(backend).__name__} lacks the commit-"
+                f"backend verb {verb!r}"
+            )
 
 
 _LOCAL = LocalFSBackend()

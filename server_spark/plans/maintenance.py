@@ -23,11 +23,7 @@ Scale notes:
   no longer qualifies as fragmented, and interrupted runs are healed
   on entry.
 - OBJECT-STORE roots: this module's rename/walk machinery rejects
-  URI paths loudly (see ``_require_local``); the bucket-capable
-  compaction/Z-order/table-swap is ``plans.versioned_table`` (r14) —
-  immutable generations + a CAS-swapped version pointer through the
-  commit backend, which also removes the two-rename swap's torn
-  window for concurrent readers.
+  URI paths loudly (see ``_require_local``); buckets cannot rename.
 """
 
 from __future__ import annotations

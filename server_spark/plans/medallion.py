@@ -61,10 +61,7 @@ class MedallionPaths:
     goes through whatever Hadoop connector serves the scheme. The
     rename-based maintenance layer (compaction/table swaps in
     ``plans.maintenance``) remains local-FS-only and rejects URI
-    roots loudly — buckets cannot rename; the bucket-capable layout
-    rewrite is ``plans.versioned_table`` (r14): immutable
-    generations + a CAS-swapped version pointer, rename-free by
-    construction."""
+    roots loudly — buckets cannot rename."""
 
     root: str
     backend: object | None = None
@@ -133,14 +130,15 @@ def commit_lock(
 
     r13: pass ``backend`` (or construct MedallionPaths with one / set
     SPARK_GRAFT_COMMIT_BACKEND) to hold the lock through a commit
-    backend's PUT/GET/DELETE verbs instead of POSIX O_EXCL — the
-    object-store variant. That path trades the POSIX lock's atomic
-    rename-based stale-break for a read-check-delete break (two
-    breakers can race; best-effort by design — the _claim_batch_id
-    conditional PUT stays the correctness backstop either way, and
-    heartbeats are payload rewrites instead of mtime touches). A URI
-    root with no backend raises rather than silently running O_EXCL
-    against a local path that merely LOOKS like a bucket.
+    backend instead of POSIX O_EXCL — the object-store variant
+    (``_backend_lock``). It claims an absent lock with a conditional
+    PUT and makes every other transition — stale break, heartbeat
+    (a payload rewrite instead of an mtime touch), release — a
+    ``replace_if_match`` CAS on the exact prior bytes, so exactly one
+    of N racing breakers wins; a backend without that verb is refused
+    with a TypeError before anything is written. A URI root with no
+    backend raises rather than silently running O_EXCL against a
+    local path that merely LOOKS like a bucket.
 
     The hand-rolled log gave snapshot/time-travel/idempotency for a
     SINGLE writer; two concurrent ``ingest_bronze_incremental`` calls
@@ -311,32 +309,29 @@ def commit_lock(
 @contextlib.contextmanager
 def _backend_lock(lockfile: str, backend, timeout: float,
                   stale_after: float):
-    """commit_lock's object-store variant: claim via conditional PUT,
-    heartbeat by rewriting the payload's beat_at (buckets have no
-    mtime to touch). With the OPTIONAL ``replace_if_match`` CAS verb
-    (S3 If-Match etag PUT) EVERY state transition is conditional on
-    the exact prior bytes (r14, closing the r13 advisor findings):
-    stale break swaps the dead holder's exact payload for the
-    breaker's claim (exactly one of N racing breakers wins), the
-    HEARTBEAT swaps our own last payload for a fresher one (a thief's
-    intervening claim changes the bytes, so a delayed beat cleanly
-    loses instead of overwriting the thief), and RELEASE swaps our
-    payload for a ``released`` tombstone that the next contender
-    CAS-claims (a post-ownership-proof DELETE could kill a breaker's
-    fresh claim; the tombstone can't). Consequence: on CAS backends a
-    released lock reads as a tombstone object, not as absent.
-    Without the verb everything degrades to the documented
-    best-effort read-check-then-write forms: two breakers can both
-    delete+claim and briefly double-hold, a delayed heartbeat can
-    overwrite a thief. Either way the lock is contention control,
-    not the correctness layer: a double-held critical section
-    double-MINTS, and the _claim_batch_id conditional PUT turns that
-    into one loud ConcurrentCommitError before any manifest append
-    (the exact defense-in-depth contract the r12 non-atomic-rename
-    tests pinned for the POSIX lock)."""
+    """commit_lock's object-store variant: claim an absent lock via
+    conditional PUT; every other transition is a ``replace_if_match``
+    CAS on the exact prior bytes (S3 If-Match etag PUT), so the
+    backend must carry that verb — one without it is refused with a
+    TypeError before any lock object is written. Stale BREAK swaps
+    the dead holder's exact payload for the breaker's claim (exactly
+    one of N racing breakers wins); the HEARTBEAT rewrites beat_at
+    (buckets have no mtime to touch) by swapping our own last payload
+    for a fresher one, so a thief's intervening claim changes the
+    bytes and a delayed beat cleanly loses instead of overwriting it;
+    RELEASE swaps our payload for a ``released`` tombstone that the
+    next contender CAS-claims (a post-ownership-proof DELETE could
+    kill a breaker's fresh claim; the tombstone can't). Consequence:
+    a released lock reads as a tombstone object, not as absent. The
+    lock is contention control, not the correctness layer: were a
+    critical section ever double-held it would double-MINT, and the
+    _claim_batch_id conditional PUT turns that into one loud
+    ConcurrentCommitError before any manifest append (the
+    defense-in-depth contract the r12 non-atomic-rename tests pinned
+    for the POSIX lock)."""
+    cb.require_verbs(backend, "commit_lock backend")
     token = f"{os.getpid()}-{os.urandom(8).hex()}"
     deadline = time.monotonic() + timeout
-    cas = getattr(backend, "replace_if_match", None)
     # the EXACT bytes we last wrote while holding — the HEARTBEAT
     # names them as its CAS expected value, so a thief's claim
     # (different bytes) makes a delayed beat cleanly lose instead of
@@ -348,19 +343,6 @@ def _backend_lock(lockfile: str, backend, timeout: float,
     # join can leave a beat CAS in flight, so held may be stale at
     # release time).
     held = {"payload": b""}
-
-    def _doc() -> dict | None:
-        raw = backend.read(lockfile)
-        if raw is None:
-            return None
-        try:
-            return json.loads(raw)
-        except ValueError:
-            return {}
-
-    def _owned() -> bool:
-        d = _doc()
-        return bool(d) and d.get("token") == token
 
     def _acquire_once() -> bool:
         mine = cb.lock_payload(token)
@@ -374,32 +356,18 @@ def _backend_lock(lockfile: str, backend, timeout: float,
             d = json.loads(raw)
         except ValueError:
             d = {}
-        if d.get("released"):
-            # a CAS-capable releaser leaves a TOMBSTONE instead of
-            # deleting (deleting after a CAS-proof of ownership
-            # reopened the window: a contender could break-claim the
-            # tombstone and the delete would kill its fresh claim).
-            # Claiming a tombstone is itself a CAS, so exactly one
-            # contender wins it.
-            if callable(cas):
-                if cas(lockfile, mine, raw):
-                    held["payload"] = mine
-                    return True
-                return False
-            backend.delete(lockfile)  # no-CAS: clear, retry the PUT
-            return False
+        # a released TOMBSTONE is claimable at once (a releaser never
+        # deletes: deleting after a CAS-proof of ownership reopened
+        # the window — a contender could break-claim and the delete
+        # would kill its fresh claim); a live claim only once stale
         beat = d.get("beat_at") or d.get("claimed_at") or 0
-        if time.time() - beat > stale_after:
-            if callable(cas):
-                # atomic break-and-claim: succeeds only against the
-                # EXACT dead payload we judged stale — a concurrent
-                # breaker's win or a late heartbeat changes the bytes
-                # and our CAS cleanly loses
-                if cas(lockfile, mine, raw):
-                    held["payload"] = mine
-                    return True
-                return False
-            backend.delete(lockfile)  # best-effort (see docstring)
+        if d.get("released") or time.time() - beat > stale_after:
+            # atomic claim: succeeds only against the EXACT payload we
+            # read — a concurrent claimer's win or a late heartbeat
+            # changes the bytes and our CAS cleanly loses
+            if backend.replace_if_match(lockfile, mine, raw):
+                held["payload"] = mine
+                return True
         return False
 
     while not _acquire_once():
@@ -418,14 +386,10 @@ def _backend_lock(lockfile: str, backend, timeout: float,
     def _beat() -> None:
         while not stop_beat.wait(stale_after / 4.0):
             fresh = cb.lock_payload(token)
-            if callable(cas):
-                # conditional on our exact last payload: a thief's
-                # intervening claim changes the bytes and this write
-                # cleanly loses — we stop touching the lock entirely
-                if cas(lockfile, fresh, held["payload"]):
-                    held["payload"] = fresh
-            elif _owned():  # no-CAS fallback: read-then-put residual
-                backend.put(lockfile, fresh)
+            # conditional on our exact last payload: a thief's
+            # intervening claim changes the bytes and this write
+            # cleanly loses — we stop touching the lock entirely
+            if backend.replace_if_match(lockfile, fresh, held["payload"]):
                 held["payload"] = fresh
 
     beat = threading.Thread(
@@ -437,36 +401,33 @@ def _backend_lock(lockfile: str, backend, timeout: float,
     finally:
         stop_beat.set()
         beat.join(timeout=5.0)
-        if callable(cas):
-            # release = CAS → a released TOMBSTONE (never delete:
-            # between a proof-of-ownership and a delete a breaker
-            # could claim, and the delete would kill its claim). The
-            # expected value is a FRESH READ checked for our token,
-            # not held["payload"]: a timed-out join can leave the
-            # beat thread's CAS still in flight (r14 review — a
-            # stalled store call outliving the 5 s join), and a beat
-            # landing between our read and CAS just makes one retry.
-            # Tombstoning failure leaves a live-looking claim that
-            # ages out via stale break — bounded retries, not a loop.
-            for _ in range(4):
-                raw = backend.read(lockfile)
-                if raw is None:
-                    break
-                try:
-                    if json.loads(raw).get("token") != token:
-                        break  # stolen — not ours to release
-                except ValueError:
-                    break
-                if backend.replace_if_match(
-                    lockfile,
-                    json.dumps(
-                        {"released": True, "released_at": time.time()}
-                    ).encode(),
-                    raw,
-                ):
-                    break
-        elif _owned():
-            backend.delete(lockfile)
+        # release = CAS → a released TOMBSTONE (never delete: between
+        # a proof-of-ownership and a delete a breaker could claim, and
+        # the delete would kill its claim). The expected value is a
+        # FRESH READ checked for our token, not held["payload"]: a
+        # timed-out join can leave the beat thread's CAS still in
+        # flight (r14 review — a stalled store call outliving the 5 s
+        # join), and a beat landing between our read and CAS just
+        # makes one retry. Tombstoning failure leaves a live-looking
+        # claim that ages out via stale break — bounded retries, not
+        # a loop.
+        for _ in range(4):
+            raw = backend.read(lockfile)
+            if raw is None:
+                break
+            try:
+                if json.loads(raw).get("token") != token:
+                    break  # stolen — not ours to release
+            except ValueError:
+                break
+            if backend.replace_if_match(
+                lockfile,
+                json.dumps(
+                    {"released": True, "released_at": time.time()}
+                ).encode(),
+                raw,
+            ):
+                break
 
 
 # One dump (the manifest key), one table partition, and one snapshot

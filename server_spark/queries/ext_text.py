@@ -740,11 +740,17 @@ def x40_quality_master(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
 
-    # corpus-LM score (x33 shape)
+    # corpus-LM score (x33 shape). Both shared relations are
+    # materialized eagerly, as in ext_dedup._gated_edges: each feeds
+    # concurrently running consumer stages, and a lazy checkpoint's
+    # lineage is truncated when the first of them ends, so the others'
+    # SQL metric updates reach accumulators the driver has already
+    # dropped (``non-existent accumulator``). Each lazy one dropped
+    # updates on its own when x40 ran repeatedly in one session.
     toks = docs.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token"),
-    ).transform(lazy_barrier)
+    ).transform(barrier)
     freq = toks.groupBy("token").agg(F.count("*").alias("cnt"))
     total = toks.agg(F.count("*").alias("total"))
     lp = (
@@ -756,7 +762,7 @@ def x40_quality_master(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.avg(F.log(F.col("cnt").cast("double") / F.col("total")))
             ).alias("avg_logprob")
         )
-        .transform(lazy_barrier)  # feeds the histogram AND the doc join
+        .transform(barrier)  # feeds the histogram AND the doc join
     )
     # Tail rule on a FIXED 0.01-wide grid (the DDSketch log-bucket
     # pattern): the grid histogram is BOUNDED by the score range /

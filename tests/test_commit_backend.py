@@ -119,6 +119,27 @@ def test_injected_backend_resolution(monkeypatch):
         cb.injected_backend()
 
 
+def test_injected_backend_without_cas_is_refused(monkeypatch):
+    """The env hook resolves only a backend the commit lock can hold:
+    one lacking just ``replace_if_match`` (MemBackend has every other
+    verb) raises a TypeError naming that verb at resolution."""
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_BACKEND", f"{__name__}:MemBackend")
+    with pytest.raises(TypeError, match="'replace_if_match'"):
+        cb.injected_backend()
+
+
+def test_explicit_backend_without_cas_is_refused(monkeypatch):
+    """An explicit ``backend=`` gets the same check where the backend
+    lock starts: the refusal names the missing verb, and no lock
+    object has been written when it is raised."""
+    monkeypatch.delenv("SPARK_GRAFT_COMMIT_BACKEND", raising=False)
+    be = MemBackend()
+    with pytest.raises(TypeError, match="'replace_if_match'"):
+        with med.commit_lock("s3://bucket/lake", backend=be):
+            pass  # pragma: no cover — the lock must refuse
+    assert be.objs == {}
+
+
 def test_uri_roots_gated_on_backend(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_COMMIT_BACKEND", raising=False)
     with pytest.raises(ValueError, match="local-FS only"):

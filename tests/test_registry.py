@@ -68,12 +68,18 @@ def test_queries_and_oracles_align():
 
 def test_in_package_imports_resolve():
     """Every ``from server_spark... import name`` and ``import
-    server_spark...`` in the package resolves, function-local ones
-    included: a dangling local import otherwise raises only when the
-    query that holds it runs."""
+    server_spark...`` resolves, function-local ones included, in the
+    package and in everything that imports it: the tests, the scripts,
+    the benchmarks and the driver entry. A dangling local import
+    otherwise raises only when the query that holds it runs, and one
+    in a test file only as a collection error."""
     pkg = Path(registry.__file__).resolve().parent
+    root = pkg.parent
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in (pkg, root / "tests", root / "scripts", root / "perfbench"):
+        files += d.rglob("*.py")
     missing = []
-    for path in sorted(pkg.rglob("*.py")):
+    for path in sorted(files):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.Import):
                 targets = [(a.name, None) for a in node.names]
@@ -84,7 +90,7 @@ def test_in_package_imports_resolve():
             for module, name in targets:
                 if module.split(".")[0] != "server_spark":
                     continue
-                where = f"{path.relative_to(pkg.parent)}:{node.lineno}"
+                where = f"{path.relative_to(root)}:{node.lineno}"
                 try:
                     mod = importlib.import_module(module)
                 except ImportError as e:
