@@ -145,7 +145,13 @@ def _words_and_cov(
             F.col("s.pos").alias("pos"),
             F.col("s.span").alias("span"),
         )
-        .transform(lazy_barrier)  # feeds the inventory AND the occ join
+        # feeds the inventory AND the occ join, materialized eagerly
+        # as in ext_dedup._gated_edges: with a lazy checkpoint here the
+        # first consumer job to end truncated its lineage while the
+        # other still ran, and x46 dropped SQL metric updates
+        # (``non-existent accumulator``). with_arr stays lazy: making
+        # it eager alone did not stop the drops.
+        .transform(barrier)
     )
     inv = (
         sp.groupBy("span")

@@ -13,11 +13,10 @@ machinery becomes multi-driver safe on a bucket without touching any
 caller.
 
 The protocol is deliberately the object-store wire surface and
-nothing more — six verbs every store has:
+nothing more — five verbs every store has, each one with a caller:
 
 - ``put_if_absent(path, payload) -> bool`` — atomic create; False iff
-  the object already existed (the ONLY correctness-bearing verb).
-- ``put(path, payload)`` — unconditional overwrite.
+  the object already existed (batch-id claims, lock acquisition).
 - ``read(path) -> bytes | None`` — GET (lock ownership checks).
 - ``list_names(prefix) -> iterable[str]`` — relative keys under a
   prefix, recursive, MAY BE LAZY (claims listing, manifest
@@ -30,21 +29,22 @@ nothing more — six verbs every store has:
   compare-and-swap, True iff the object's current payload equalled
   ``expected`` and was replaced (S3 ``If-Match`` etag / GCS
   ``if-generation-match`` conditional PUT; the local analog compares
-  by value under a per-key advisory lock that unconditional ``put``
-  also takes — see ``_key_guard``). Every backend commit-lock
-  transition but the claim of an absent key is this verb, conditional
-  on exact prior bytes: stale BREAK (one of N racing breakers wins),
-  HEARTBEAT (a delayed beat can't overwrite a thief), and RELEASE (a
-  tombstone swap instead of a delete). Claims alone never need it: an
+  by value under a per-key advisory lock, so two racing swaps of one
+  key cannot both pass the compare — see ``_key_guard``). Every
+  backend commit-lock transition but the claim of an absent key is
+  this verb, conditional on exact prior bytes: stale BREAK (one of N
+  racing breakers wins), HEARTBEAT (a delayed beat can't overwrite a
+  thief), and RELEASE (a tombstone swap instead of a delete). Claims
+  alone never need it: an
   explicit ``MedallionPaths(backend=...)`` without it still mints
   batch ids, but the env hook and the lock refuse it
   (``require_verbs``).
 
-NOT in the protocol: rename, mtime, directory semantics. Those are
-POSIX-isms the backend-routed machinery must not rely on — the
-two-rename swap layer in ``plans.maintenance`` therefore stays
-LOCAL-FS ONLY and rejects URI roots loudly rather than pretending a
-bucket can rename.
+NOT in the protocol: unconditional overwrite, rename, mtime,
+directory semantics. Those are POSIX-isms the backend-routed
+machinery must not rely on — the two-rename compaction swap in
+``plans.maintenance`` therefore stays LOCAL-FS ONLY and rejects URI
+roots loudly rather than pretending a bucket can rename.
 """
 
 from __future__ import annotations
@@ -123,13 +123,11 @@ class LocalFSBackend:
     @staticmethod
     @_contextlib_contextmanager
     def _key_guard(path: str):
-        """Per-key advisory flock serializing every conditional-
-        sensitive writer of one key (CAS and unconditional put). The
-        r13 advisor finding: with only replace_if_match taking the
-        guard, an unconditional put (lock heartbeat) landing between
-        the CAS's read and its os.replace was silently overwritten —
-        the local backend's 'atomic stale break' claim did not hold
-        against a live holder's late heartbeat. Guard files are
+        """Per-key advisory flock serializing concurrent
+        ``replace_if_match`` calls on one key: without it, two swappers
+        could both read the expected payload and both os.replace, so a
+        stale BREAK would have two winners and a late HEARTBEAT could
+        overwrite the thief that broke its lock. Guard files are
         HIDDEN-named (dot-prefixed basename) so list_names consumers
         never mistake one for table data (the old ``<key>.cas_guard``
         sibling of a claims file was listable)."""
@@ -146,21 +144,6 @@ class LocalFSBackend:
             yield
         finally:
             os.close(gfd)  # closing drops the flock
-
-    def _put_unguarded(self, path: str, payload: bytes) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        # write-then-rename so a concurrent read never sees a torn
-        # payload (object-store PUTs are all-or-nothing; match that)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".staged-")
-        try:
-            os.write(fd, payload)
-        finally:
-            os.close(fd)
-        os.replace(tmp, path)
-
-    def put(self, path: str, payload: bytes) -> None:
-        with self._key_guard(path):
-            self._put_unguarded(path, payload)
 
     def read(self, path: str) -> bytes | None:
         try:
@@ -202,16 +185,23 @@ class LocalFSBackend:
     def replace_if_match(self, path: str, payload: bytes,
                          expected: bytes) -> bool:
         """The CAS verb (see module docstring). POSIX cannot
-        compare-and-swap a file's content atomically, so all
-        conditional-sensitive writers of one key — CAS AND
-        unconditional put, see ``_key_guard`` — serialize on a
-        per-key advisory flock; the swap itself is an os.replace so
-        readers still never see a torn payload. Host-local by design
-        — the multi-host CAS is the real object store's etag PUT."""
+        compare-and-swap a file's content atomically, so the swappers
+        of one key serialize on a per-key advisory flock
+        (``_key_guard``); the swap itself is write-then-os.replace so a
+        concurrent read never sees a torn payload (object-store PUTs
+        are all-or-nothing; this matches that). Host-local by design —
+        the multi-host CAS is the real object store's etag PUT."""
         with self._key_guard(path):
             if self.read(path) != expected:
                 return False
-            self._put_unguarded(path, payload)
+            fd, tmp = tempfile.mkstemp(
+                dir=os.path.dirname(path), prefix=".staged-"
+            )
+            try:
+                os.write(fd, payload)
+            finally:
+                os.close(fd)
+            os.replace(tmp, path)
             return True
 
 
@@ -255,8 +245,8 @@ def injected_backend():
     return backend
 
 
-_VERBS = ("put_if_absent", "put", "read", "list_names", "delete",
-         "replace_if_match")
+_VERBS = ("put_if_absent", "read", "list_names", "delete",
+          "replace_if_match")
 
 
 def require_verbs(backend, what: str) -> None:

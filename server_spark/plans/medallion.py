@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from server_spark.operators import auctions as ops
 from server_spark.plans import commit_backend as cb
+from server_spark.plans import maintenance as mnt
 
 
 @dataclass
@@ -43,12 +44,11 @@ class MedallionPaths:
     """Root of one medallion tree. LOCAL-FILESYSTEM by default,
     enforced at construction (r12 advisor finding): the transactional
     mechanisms under this root — the O_EXCL commit lock, the
-    tmp→aside→rename table swaps, the in-table watermark files, and
-    load_manifest's "never written" probe — are POSIX-rename
-    semantics. On an object-store URI (s3://bucket, gs://bucket) the
-    locks would not exclude, the swaps would not be atomic, and the
-    manifest probe would always read "absent" and silently re-mint
-    historical batch_ids.
+    two-rename compaction swap, and load_manifest's "never written"
+    probe — are POSIX-rename semantics. On an object-store URI
+    (s3://bucket, gs://bucket) the locks would not exclude, the swaps
+    would not be atomic, and the manifest probe would always read
+    "absent" and silently re-mint historical batch_ids.
 
     r13 (VERDICT r12 item 2): an object-store root IS accepted when a
     COMMIT BACKEND is supplied — either the explicit ``backend`` field
@@ -59,9 +59,9 @@ class MedallionPaths:
     manifest/bronze existence probes) routes through the backend's
     conditional-PUT/GET/LIST/DELETE verbs; Spark's own parquet IO
     goes through whatever Hadoop connector serves the scheme. The
-    rename-based maintenance layer (compaction/table swaps in
-    ``plans.maintenance``) remains local-FS-only and rejects URI
-    roots loudly — buckets cannot rename."""
+    rename-based compaction in ``plans.maintenance`` remains
+    local-FS-only and rejects URI roots loudly — buckets cannot
+    rename."""
 
     root: str
     backend: object | None = None
@@ -541,9 +541,10 @@ def load_manifest(spark: SparkSession, paths: MedallionPaths) -> DataFrame:
     manifest (corrupt footer, transient IO) must propagate loudly — an
     empty fallback there would silently reset versioning: the next
     ingest re-mints historical batch_ids and re-appends seen dumps,
-    and every watermarked gold skips the re-minted batches forever
-    (r11 review finding). The schema is given, so reading it runs no
-    inference job; files from before versioning read batch_id 0."""
+    and an incremental refresh from a stored manifest version skips
+    the re-minted batches forever (r11 review finding). The schema is
+    given, so reading it runs no inference job; files from before
+    versioning read batch_id 0."""
     if not _table_has_data(paths, paths.manifest):
         return _json_rows(spark, [], _MANIFEST_SCHEMA)
     m = spark.read.schema(_MANIFEST_SCHEMA).parquet(paths.manifest)
@@ -968,9 +969,6 @@ def compact_small_files(
     reader re-reads the same rows either way; a table format's commit
     protocol is the production answer).
     """
-    # Local import: maintenance imports medallion function-locally.
-    from server_spark.plans import maintenance as mnt
-
     # Rename-based machinery stays local-FS-only (Delta/Iceberg
     # OPTIMIZE is the bucket answer); the shared gate raises on a URI
     # root and normalizes file: URIs.

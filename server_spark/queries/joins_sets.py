@@ -534,6 +534,33 @@ def u7_bag_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # A17 — mergeable distinct sketches (incremental COUNT(DISTINCT))
 # ---------------------------------------------------------------------------
+#
+# COUNT(DISTINCT) is the one common aggregate that is NOT incrementally
+# maintainable from per-batch counts — distinct sets don't add. The
+# standard warehouse remedy is a MERGEABLE sketch column: each refresh
+# builds an HLL sketch per group over only the NEW batch, unions it
+# into the stored sketch (associative + commutative, so refresh order
+# and partitioning never change the result), and the estimate is read
+# off the merged sketch — the Datasketches pattern Spark 3.5+ exposes
+# natively (hll_sketch_agg / hll_union_agg / hll_sketch_estimate, all
+# JVM aggregates).
+
+
+def distinct_sketches(
+    df: DataFrame, keys: list[str], value_col: str, lg_k: int = 12
+) -> DataFrame:
+    """Per-key HLL sketch of ``value_col`` — the stored, mergeable
+    state (binary column ``sketch``). One map-combined hash-agg."""
+    return df.groupBy(*keys).agg(
+        F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch")
+    )
+
+
+def estimate_distinct(sketches: DataFrame, keys: list[str]) -> DataFrame:
+    """Read the per-key estimate off the sketch column."""
+    return sketches.select(
+        *keys, F.hll_sketch_estimate("sketch").alias("distinct_est")
+    )
 
 
 @register(
@@ -552,11 +579,6 @@ def u7_bag_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     late=True,
 )
 def a17_sketch_distinct_owners(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from server_spark.plans.maintenance import (
-        distinct_sketches,
-        estimate_distinct,
-    )
-
     live = auctions(spark, sf_dir).withColumn(
         "day", F.to_date("dump_ts")
     )

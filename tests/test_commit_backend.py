@@ -39,9 +39,6 @@ class MemBackend:
             self.objs[path] = payload
             return True
 
-    def put(self, path: str, payload: bytes) -> None:
-        self.objs[path] = payload
-
     def read(self, path: str):
         return self.objs.get(path)
 
@@ -86,8 +83,9 @@ def test_backend_verbs_roundtrip(tmp_path):
     root = str(tmp_path / "t")
     assert list(be.list_names(root)) == []  # absent prefix lists empty
     assert be.read(os.path.join(root, "x")) is None
-    be.put(os.path.join(root, "a", "x"), b"1")
-    be.put(os.path.join(root, "a", "x"), b"2")  # overwrite allowed
+    assert be.put_if_absent(os.path.join(root, "a", "x"), b"1") is True
+    # overwrite allowed, conditional on the current payload
+    assert be.replace_if_match(os.path.join(root, "a", "x"), b"2", b"1")
     assert be.read(os.path.join(root, "a", "x")) == b"2"
     assert be.put_if_absent(os.path.join(root, "a", "x"), b"3") is False
     names = list(be.list_names(root))
@@ -180,15 +178,16 @@ def test_claims_route_through_backend_on_uri_root(monkeypatch):
     # the never-written probe routes through LIST: hidden components
     # (_claims) do not count as table data
     assert med._table_has_data(paths, paths.manifest) is False
-    be.put("s3://bucket/lake/manifest/ingested_dumps/part-0.parquet",
-           b"x")
+    be.put_if_absent(
+        "s3://bucket/lake/manifest/ingested_dumps/part-0.parquet", b"x"
+    )
     assert med._table_has_data(paths, paths.manifest) is True
 
 
 def test_backend_lock_mutual_exclusion(tmp_path):
     """The backend lock variant serializes a critical section using
-    only protocol verbs (claim via conditional PUT, release via
-    token-checked DELETE)."""
+    only protocol verbs (claim via conditional PUT, release via a CAS
+    swap to a tombstone)."""
     be = cb.LinkConditionalPutBackend()
     root = str(tmp_path / "lake")
     order: list[str] = []
@@ -229,12 +228,12 @@ def test_backend_lock_breaks_dead_holder(tmp_path):
 
 
 def test_replace_if_match_exactly_one_winner(tmp_path):
-    """The optional CAS verb (r13): N concurrent swappers against the
+    """The required CAS verb: N concurrent swappers against the
     same expected payload — exactly one True, and the object ends as
     the winner's payload (the S3 If-Match etag PUT analog)."""
     be = cb.LocalFSBackend()
     key = str(tmp_path / "lock")
-    be.put(key, b"stale-holder")
+    be.put_if_absent(key, b"stale-holder")
     wins = []
 
     def attempt(i):
@@ -361,18 +360,13 @@ print("done")
 
 
 def test_maintenance_layer_rejects_uri_paths():
-    """The rename/walk/sidecar maintenance machinery must FAIL LOUDLY
-    on bucket paths, not silently no-op: os.walk over a bucket URI
-    yields nothing (compaction reports the table clean, schema_drift
-    reports no drift) and os.path.exists reads absent (_gold_watermark
-    would return the never-written epoch and a gold fold would
-    double-apply)."""
+    """The rename/walk compaction machinery must FAIL LOUDLY on bucket
+    paths, not silently no-op: os.walk over a bucket URI yields
+    nothing, so compaction would report the table clean."""
     from server_spark.plans import maintenance as mnt
 
     for fn, args in (
         (mnt.partition_file_stats, ("s3://bucket/lake/gold",)),
-        (mnt.schema_drift, (None, "s3://bucket/lake/gold")),
-        (mnt._gold_watermark, ("s3://bucket/lake/gold/t",)),
         (med.compact_small_files, (None, "s3://bucket/lake/gold")),
     ):
         with pytest.raises(ValueError, match="local-FS only"):
@@ -385,14 +379,20 @@ def test_file_uri_normalizes_instead_of_silent_noop(tmp_path):
     no-op — the exact failure the guard exists to block. The shared
     gate (cb.local_path) must NORMALIZE them so the maintenance
     machinery sees the real path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from server_spark.plans import maintenance as mnt
 
     gold = tmp_path / "gold" / "t"
     gold.mkdir(parents=True)
-    (gold / "_watermark").write_text(json.dumps({"batch_id": 7}))
-    # a file: spelling of the same dir reads the REAL watermark —
-    # pre-fix it read {} (never-written) and a fold would double-apply
-    assert mnt._gold_watermark(f"file:{gold}") == {"batch_id": 7}
+    part = gold / "part-0.parquet"
+    pq.write_table(pa.table({"x": [1, 2, 3]}), part)
+    # a file: spelling of the same table lists the REAL file — pre-fix
+    # os.walk no-opped on it and compaction read the table as empty
+    assert mnt.partition_file_stats(f"file:{gold}") == {
+        str(gold): (1, part.stat().st_size)
+    }
     assert cb.local_path(f"file://{gold}", "t") == str(gold)
     assert cb.local_path("FILE:/x/y", "t") == "/x/y"  # case-insensitive
     with pytest.raises(ValueError, match="local-FS only"):

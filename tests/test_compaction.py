@@ -1,16 +1,12 @@
-"""maintenance: compaction verify flag + schema-drift audit."""
+"""maintenance: compaction verify flag."""
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pytest
 
-from server_spark.plans.maintenance import (
-    compact_partitions,
-    schema_drift,
-)
+from server_spark.plans.maintenance import compact_partitions
 
 
 @pytest.fixture()
@@ -58,26 +54,3 @@ def test_verified_compaction_preserves_content(spark, fragmented_table):
     # idempotent second pass
     assert compact_partitions(spark, root, min_files=4, verify=True) == 0
 
-
-def test_schema_drift_reports_added_and_retyped_columns(
-    spark, tmp_path
-):
-    root = str(tmp_path / "drift")
-    os.makedirs(root)
-    pd.DataFrame({"a": [1, 2], "b": [1.0, 2.0]}).to_parquet(
-        os.path.join(root, "f1.parquet")
-    )
-    # b retyped, c added
-    pd.DataFrame(
-        {"a": [3], "b": pd.array([3], dtype="int64"), "c": ["x"]}
-    ).to_parquet(os.path.join(root, "f2.parquet"))
-    drift = {d["column"]: d for d in schema_drift(spark, root)}
-    assert set(drift) == {"b", "c"}
-    assert drift["c"]["n_files_present"] == 1
-    assert drift["c"]["n_files_total"] == 2
-    assert len(drift["b"]["types"]) == 2
-    assert "a" not in drift  # stable column is silent
-
-
-def test_schema_drift_clean_table_is_silent(spark, fragmented_table):
-    assert schema_drift(spark, fragmented_table) == []

@@ -88,9 +88,7 @@ def test_simhash_properties(spark):
 def test_lsh_topk_recall(spark, sf_dir):
     """LSH top-k must return a subset of plausible neighbors and find
     the query's own cluster at high rank on real embeddings."""
-    from server_spark.queries.extensions import (
-        _seeded_tables,
-    )
+    from server_spark.queries.ext_similarity import _seeded_tables
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -153,7 +151,7 @@ def test_fuzzy_search_tolerates_map_columns(spark):
 def test_udtf_chunks_reassemble(spark):
     """x13: concatenating a doc's chunks in order must reproduce the
     whitespace-normalized document."""
-    from server_spark.queries.extensions import x13_udtf_chunks
+    from server_spark.queries.ext_pipeline import x13_udtf_chunks
 
     out = x13_udtf_chunks(spark, "/root/testdata/sf0.001")
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -235,7 +233,7 @@ def test_connected_components_chain(spark):
 def test_hash_split_proportions_and_determinism(spark):
     """x17: md5 bucketing lands near 80/10/10 and is a pure function
     of the id (two runs identical)."""
-    from server_spark.queries.extensions import x17_hash_split
+    from server_spark.queries.ext_pipeline import x17_hash_split
 
     sf = "/root/testdata/sf0.01"
     a = x17_hash_split(spark, sf).collect()
@@ -253,7 +251,7 @@ def test_sequence_packing_invariants(spark):
     """x20: within each shard, pack ids/offsets are exactly the
     running-token-count layout: start = pack_id*budget + offset,
     starts increase by n_tokens in doc order, offsets stay < budget."""
-    from server_spark.queries.extensions import PACK_BUDGET, x20_sequence_packing
+    from server_spark.queries.ext_pipeline import PACK_BUDGET, x20_sequence_packing
 
     rows = x20_sequence_packing(spark, "/root/testdata/sf0.01").collect()
     by_shard: dict[str, list] = {}
@@ -311,7 +309,7 @@ def test_exact_paths_match_brute_force(spark, sf_dir):
     brute-force path scores with the `dot` fold and the others with
     the unrolled `dot_fixed`, so this also pins that the two agree
     once r4-rounded."""
-    from server_spark.queries.extensions import _seeded_tables
+    from server_spark.queries.ext_similarity import _seeded_tables
     from server_spark.similarity import ivf
     from server_spark.similarity.pq import ivfpq_refine_topk
 

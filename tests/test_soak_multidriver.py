@@ -4,20 +4,21 @@ VERDICT r13 item 2).
 The r13 pieces — the conditional-put mint race, the backend lock's
 CAS transitions, ingest-through-the-env-hook — were each contract-
 tested in isolation; this composes them: three REAL processes, each
-with its own SparkSession, concurrently run manifest-gated ingests,
-mergeable-gold refreshes, and (one of them) a GDPR erasure against
-the SAME lake root through the same injected conditional-put backend.
-Afterwards the parent asserts the invariants the whole transactional
-story exists for:
+with its own SparkSession, concurrently run manifest-gated ingests
+and incremental silver/gold refreshes against the SAME lake root
+through the same injected conditional-put backend. Afterwards the
+parent asserts the invariants the whole transactional story exists
+for:
 
 - version-log integrity: every dump key committed exactly once, every
   commit under its own unique batch_id, ids strictly positive;
-- the erased owner is gone from bronze (the erasure raced live
-  ingests and lost no other rows);
-- gold == one-shot rebuild: the incremental owner-sketch gold equals
-  a from-scratch sketch build over the final bronze (HLL union
-  algebra is refresh-order independent) and the decimal moments gold
-  equals a from-scratch moments build EXACTLY (decimal sums).
+- bronze integrity: every committed dump key holds exactly the rows
+  ingested for it, none lost or doubled;
+- gold == full rebuild: the incrementally refreshed ``gold_prices``
+  equals ``build_silver`` + ``build_gold_prices`` over the final
+  bronze. Each worker refreshes from the manifest version it read
+  before its own ingest, so every batch is covered by a refresh that
+  started after it committed, whatever the interleaving.
 
 Slow-marked: spawns three JVMs (~3 min wall).
 """
@@ -44,7 +45,6 @@ sys.path.insert(0, {repo!r})
 os.environ["SPARK_GRAFT_COMMIT_BACKEND"] = {spec!r}
 
 from server_spark.session import get_spark
-from server_spark.plans import maintenance as mnt
 from server_spark.plans import medallion as med
 
 w = int(sys.argv[1])
@@ -60,27 +60,19 @@ for k in range(3):
     for j in range(20):
         owner = f"o{{w}}-{{k}}-{{j % 5}}"
         rows.append(("eu", f"r{{j % 2}}", ts, w * 1000 + k * 100 + j,
-                     10 + j % 7, 500 + 10 * j, 1 + j % 3, owner))
-    if w == 0 and k < 2:
-        # the to-be-erased owner appears ONLY in worker 0's first two
-        # dumps, so post-erasure bronze must hold zero of its rows
-        rows.extend(
-            ("eu", "r0", ts, 9000 + k * 10 + j, 99, 777, 1, "ephemeral")
-            for j in range(5)
-        )
+                     10 + j % 7, 500 + 10 * j, 1 + j % 3, owner, "LONG"))
     raw = spark.createDataFrame(
         rows,
         "region string, realm_slug string, dump_ts timestamp, auc long,"
-        " item long, buyout long, quantity long, owner string",
+        " item long, buyout long, quantity long, owner string,"
+        " time_left string",
     )
+    since = max(med.manifest_versions(spark, paths), default=0)
     n = med.ingest_bronze_incremental(spark, raw, paths)
     # each dump spans realms r0+r1 -> two dump KEYS, one batch
     assert n == 2, f"worker {{w}} dump {{k}}: expected 2 new keys, got {{n}}"
-    mnt.refresh_owner_sketch_gold(spark, paths)
-    mnt.refresh_price_moments_gold(spark, paths)
-    if w == 0 and k == 1:
-        rep = mnt.forget_owner(spark, paths, "ephemeral")
-        assert rep["partitions"] > 0, rep
+    assert med.build_silver_incremental(spark, paths, since) >= 1
+    assert med.build_gold_prices_incremental(spark, paths, since) >= 1
 
 print("worker-done", w)
 """
@@ -92,13 +84,12 @@ def test_three_driver_soak_version_log_and_gold_parity(
 ):
     from pyspark.sql import functions as F
 
-    from server_spark.plans import maintenance as mnt
     from server_spark.plans import medallion as med
 
     root = str(tmp_path / "lake")
     os.makedirs(root, exist_ok=True)
     # Lock-acquisition budget for the workers: the three drivers
-    # serialize ~21 locked commit sections (each several Spark jobs)
+    # serialize ~27 locked commit sections (each several Spark jobs)
     # on one shared box, so the worst waiter queues behind most of
     # them; with external host load a section can take 20-30 s and
     # the 120 s single-host default trips spuriously (observed r14:
@@ -143,11 +134,9 @@ def test_three_driver_soak_version_log_and_gold_parity(
     assert all(batch_ids.count(b) == 2 for b in set(batch_ids))
     assert min(batch_ids) >= 1
 
-    # --- bronze integrity + erasure --------------------------------
+    # --- bronze integrity -----------------------------------------
     bronze = spark.read.parquet(paths.bronze)
-    # 9 dumps x 20 rows; the 10 'ephemeral' rows were erased
-    assert bronze.count() == 180
-    assert bronze.filter(F.col("owner") == "ephemeral").count() == 0
+    assert bronze.count() == 180  # 9 dumps x 20 rows
     # every committed dump key present exactly as ingested
     per_dump = {
         (r["region"], r["realm_slug"], r["dump_ts"]): r["n"]
@@ -157,40 +146,17 @@ def test_three_driver_soak_version_log_and_gold_parity(
     assert set(per_dump) == set(keys)
     assert all(n == 10 for n in per_dump.values())  # 20 rows / 2 realms
 
-    # --- gold == one-shot rebuild ----------------------------------
-    # catch-up refreshes (the erasure reset the incremental golds;
-    # later ingests advanced the log past other workers' refreshes)
-    mnt.refresh_owner_sketch_gold(spark, paths)
-    mnt.refresh_price_moments_gold(spark, paths)
-    assert mnt.refresh_owner_sketch_gold(spark, paths) == 0  # current
-    assert mnt.refresh_price_moments_gold(spark, paths) == 0
+    # --- gold == full rebuild --------------------------------------
+    def gold():
+        return {
+            (r["region"], r["realm_slug"], r["dump_ts"], r["item"]):
+                (r["volume"], r["median_buyout_per"])
+            for r in spark.read.parquet(paths.gold_prices).collect()
+        }
 
-    inc_sketch = {
-        (r["region"], r["realm_slug"]): r["distinct_est"]
-        for r in mnt.read_owner_sketch_gold(spark, paths).collect()
-    }
-    oneshot_sketch = {
-        (r["region"], r["realm_slug"]): r["distinct_est"]
-        for r in mnt.estimate_distinct(
-            mnt.distinct_sketches(
-                bronze, ["region", "realm_slug"], "owner"
-            ),
-            ["region", "realm_slug"],
-        ).collect()
-    }
-    assert inc_sketch == oneshot_sketch
-
-    inc_mom = sorted(
-        tuple(r) for r in spark.read.parquet(
-            os.path.join(root, "gold", "price_moments", "data")
-        ).collect()
-    )
-    oneshot_mom = sorted(
-        tuple(r)
-        for r in mnt.price_moments(
-            bronze.filter(F.col("buyout") > 0),
-            ["region", "realm_slug"],
-            F.col("buyout") / F.col("quantity"),
-        ).collect()
-    )
-    assert inc_mom == oneshot_mom  # EXACT (decimal sums)
+    inc = gold()
+    med.build_silver(spark, paths)
+    med.build_gold_prices(spark, paths)
+    full = gold()
+    # 9 snapshots x 2 realms x 7 item ids (each realm sees all 7)
+    assert inc == full and len(inc) == 9 * 2 * 7
